@@ -3,10 +3,14 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and prints the full JSON line:
 
     {"metric": "wall_clock_total", "value": <sum sec>, "unit": "sec",
      "queries": {"<name>": <sec>, ...}, "sf": <float>}
+
+then, LAST, a compact line with the keys ``metric``, ``value``,
+``unit``, ``sf``, ``n_queries``, ``median_sec`` and ``queries`` (the 10
+slowest only).
 
 Timing methodology: each query is materialized with a ``noop``-format
 write (full pipeline executes on the executors; nothing funnels through
@@ -19,7 +23,7 @@ statistic to the median-of-runs — pair with ``BENCH_RUNS=3`` for the
 end-of-round committed sweep so tail queries carry less single-window
 hypervisor-steal risk (BASELINE.md noise provenance); the default stays
 min-of-2 (the driver's own sweep cost is not ours to triple).
-All diagnostics go to stderr; stdout carries exactly the one JSON line.
+All diagnostics go to stderr; stdout carries only the two JSON lines.
 """
 
 from __future__ import annotations
@@ -45,13 +49,6 @@ def main() -> int:
     only = sys.argv[1:]  # optional query-name filter for local iteration
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    # keep EVERY observation hook out of the timed path (VERDICT r5 #4):
-    # ENVPROBE=0 disables record_env_once's fingerprint scan (which would
-    # otherwise ride the first timed query's load_table) and maybe_probe's
-    # per-query oracle replays.  The bench's OWN fingerprint below calls
-    # env_fingerprint()/inproc_check() directly — those are not gated —
-    # so the committed BENCH_r{N}.json evidence is unchanged.
-    os.environ.setdefault("ENVPROBE", "0")
     import __spark_entry__ as entrymod
     from merkonvectordb_spark import get_spark
 
@@ -104,42 +101,6 @@ def main() -> int:
         "sf": sf,
     }
     print(json.dumps(out))
-    # Round-5 instrumentation: the r4 driver-only oracle failures can't
-    # be reproduced locally, so the bench line — which the driver runs in
-    # the SAME environment as its correctness gate and commits verbatim
-    # as BENCH_r{N}.json — carries an environment fingerprint plus an
-    # in-process Spark-vs-DuckDB check of the red queries at the
-    # correctness SF.  See merkonvectordb_spark/probe.py.
-    probe_line: dict = {"metric": "envprobe"}
-    probe_fail: list[str] = []
-    env_min: dict = {}
-    if os.environ.get("BENCH_PROBE", "1") != "0":
-        try:
-            from merkonvectordb_spark import probe as _probe
-
-            corr_dir = "/root/testdata/sf0.01"
-            if os.path.isdir(corr_dir):
-                fp = _probe.env_fingerprint(spark, corr_dir)
-                probe_line["env"] = fp
-                env_min = {
-                    "duckdb": fp.get("duckdb"),
-                    "tz": fp.get("local_tzname"),
-                    "duck_ts": fp.get("duckdb_events_ts_type"),
-                    "spark_ts": fp.get("spark_events_raw_ts_type"),
-                    "ck_eq": list(fp.get("duckdb_events_ck") or [])
-                    == list(fp.get("spark_events_ck") or []),
-                }
-                checks = _probe.inproc_check(spark, corr_dir)
-                probe_line["probe"] = checks
-                probe_fail = [
-                    n
-                    for n, r in checks.items()
-                    if isinstance(r, dict)
-                    and not r.get("hash_match", True)
-                ]
-        except Exception as e:  # observation only — never fail the bench
-            probe_line["probe_err"] = repr(e)[:200]
-        print(json.dumps(probe_line, default=str))
     # The full per-query line above can overflow a bounded tail buffer
     # (102 timings ≈ 3 KB — round 3's BENCH record truncated mid-line and
     # parsed as null).  Emit a compact line LAST — guaranteed to survive
@@ -190,9 +151,6 @@ def main() -> int:
         "median_sec": median,
         "queries": slowest,
     }
-    if env_min:
-        compact["env_min"] = env_min
-        compact["probe_fail"] = probe_fail
     print(json.dumps(compact))
     return 0
 

@@ -1,10 +1,9 @@
 """THE canonicalization for oracle comparisons — single source of truth.
 
-Both the local gate stand-in (``tools/oracle_check.py``) and the
-in-process driver instrumentation (``merkonvectordb_spark/probe.py``)
-hash result sets through these functions.  They exist exactly once so
-the probe's verdicts can never desynchronize from the gate's: a hash
-match reported by one means the same bytes were hashed by the other.
+The local gate stand-in (``tools/oracle_check.py``) and the registry
+tests (``tests/test_registry.py``) hash result sets through these
+functions.  They exist exactly once so a hash match reported by one
+means the same bytes were hashed by the other.
 """
 
 from __future__ import annotations

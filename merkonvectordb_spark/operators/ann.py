@@ -382,6 +382,13 @@ def ivf_assign(
     (operators.index) thereby skip the assignment⋈source re-join and
     its second source scan (guide §2.4): shuffle volume is unchanged —
     the payload crossed the join's source-side exchange before."""
+    if carry and n_best != 1:
+        raise ValueError("carry is only supported with n_best=1")
+    clash = sorted({"cid", "cv", "__cos", "__b"} & set(carry))
+    if clash:
+        raise ValueError(
+            f"carry names {clash} collide with ivf_assign's own columns"
+        )
     out_carry = [c for c in carry if c != id_col]
     extra = [c for c in out_carry if c != emb_col]
     scored = (
@@ -406,8 +413,6 @@ def ivf_assign(
             .select(F.col(id_col), F.col("__b.cid").alias("cid"), *out_carry)
         )
         return best
-    if carry:
-        raise ValueError("carry is only supported with n_best=1")
     w = Window.partitionBy(id_col).orderBy(F.desc("__cos"), F.asc("cid"))
     return (
         scored.withColumn("__rn", F.row_number().over(w))

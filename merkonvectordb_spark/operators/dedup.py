@@ -328,9 +328,16 @@ def collapse_identical_sets(
         # consumers.
         from concurrent.futures import ThreadPoolExecutor
 
+        from merkonvectordb_spark.session import with_caller_context
+
+        spark = keyed.sparkSession
         with ThreadPoolExecutor(2) as pool:
-            fm = pool.submit(lambda: mem_plan.localCheckpoint(eager=True))
-            fr = pool.submit(lambda: rep_plan.localCheckpoint(eager=True))
+            fm = pool.submit(with_caller_context(
+                spark, lambda: mem_plan.localCheckpoint(eager=True)
+            ))
+            fr = pool.submit(with_caller_context(
+                spark, lambda: rep_plan.localCheckpoint(eager=True)
+            ))
             membership, rep_sets = fm.result(), fr.result()
     finally:
         keyed.unpersist()

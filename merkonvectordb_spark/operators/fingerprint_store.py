@@ -85,10 +85,15 @@ def build_minhash_store(
         # metadata (microseconds), so sequencing it costs nothing.
         from concurrent.futures import ThreadPoolExecutor
 
+        from merkonvectordb_spark.session import with_caller_context
+
         with ThreadPoolExecutor(2) as pool:
-            fs = pool.submit(store.shingles.stage, sets_df.select("__id", "__sh"))
+            fs = pool.submit(
+                with_caller_context(spark, store.shingles.stage),
+                sets_df.select("__id", "__sh"),
+            )
             fb = pool.submit(
-                store.bands.stage,
+                with_caller_context(spark, store.bands.stage),
                 band_rows(sets_df).withColumn(
                     "band_id", F.col("band_id").cast("int")
                 ),

@@ -123,9 +123,11 @@ def build_ivf_index(
     # preserving centroids-first visibility exactly as before.
     from concurrent.futures import ThreadPoolExecutor
 
+    from merkonvectordb_spark.session import with_caller_context
+
     with ThreadPoolExecutor(2) as pool:
         fcv = pool.submit(
-            idx.centroids.replace,
+            with_caller_context(spark, idx.centroids.replace),
             centroids.select(
                 F.col("cid").cast("int").alias("cid"), F.col("cv")
             ),

@@ -141,7 +141,7 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # running while matching locally under every constructible session.  Each
 # variant returns ONE column family with a mirrored oracle, so the r5
 # CORRECTNESS rows localize which value class diverges in the harness
-# environment even if the ENVPROBE channel is lost.
+# environment.
 
 
 @register(

@@ -44,34 +44,10 @@ def set_priority(names: list[str]) -> None:
     _PRIORITY[:] = list(names)
 
 
-def _maybe_wrap(name: str, fn: QueryFn) -> QueryFn:
-    """Watchlisted queries (driver-red in r4) get a probe hook: when the
-    external harness runs them at the correctness SF, an in-process
-    Spark-vs-DuckDB comparison is appended to ENVPROBE.jsonl so the
-    harness-only divergence becomes observable (probe.py docstring)."""
-    from merkonvectordb_spark import probe
-
-    if name not in probe.WATCHED:
-        return fn
-
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        df = fn(spark, sf_dir)
-        probe.maybe_probe(name, spark, sf_dir)
-        return df
-
-    wrapped.__name__ = getattr(fn, "__name__", name)
-    wrapped.__doc__ = fn.__doc__
-    return wrapped
-
-
 def queries() -> dict[str, QueryFn]:
-    out: dict[str, QueryFn] = {}
-    for n in _PRIORITY:
-        if n in _QUERIES:
-            out[n] = _maybe_wrap(n, _QUERIES[n])
+    out = {n: _QUERIES[n] for n in _PRIORITY if n in _QUERIES}
     for n, fn in _QUERIES.items():
-        if n not in out:
-            out[n] = _maybe_wrap(n, fn)
+        out.setdefault(n, fn)
     return out
 
 

@@ -94,11 +94,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     SparkSession, and the conf is runtime-settable — relying on session
     bootstrap made every events-table query fail under such sessions.
     """
-    from merkonvectordb_spark import probe
-
-    # environment fingerprint BEFORE any conf pinning, so the harness's
-    # own session values are captured (VERDICT r4 next-round #2)
-    probe.record_env_once(spark, sf_dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # UTC must hold in EXTERNAL harness sessions too: the NTZ→TIMESTAMP
     # normalization below and all timestamp rendering assume it, and a

@@ -11,7 +11,9 @@ paths.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
@@ -124,3 +126,18 @@ def free_persisted_blocks(spark: SparkSession) -> int:
     for jrdd in rdds:
         jrdd.unpersist(False)
     return len(rdds)
+
+
+def with_caller_context(spark: SparkSession, fn: Callable) -> Callable:
+    """Wrap ``fn`` for a helper thread so the jobs it starts carry the
+    calling thread's job group, job description and session tags.  A
+    plain pool thread starts with empty local properties, so its jobs
+    would otherwise be ungrouped and unattributed.
+
+    Each call takes its own copy of the caller's properties: Spark SQL
+    sets per-thread properties (the execution id) while a query runs,
+    and two threads sharing one copy would see each other's."""
+    wrap = inheritable_thread_target(spark)
+    # without pinned threads pyspark returns its argument unchanged;
+    # then there is no per-thread context to carry
+    return fn if wrap is spark else wrap(fn)

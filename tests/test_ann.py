@@ -118,6 +118,36 @@ def test_ivf_assignment_is_partial_aggregable(clustered):
     assert "partial" in plan.lower()
 
 
+def _ivf_cents(clustered):
+    return clustered.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("cid"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
+    )
+
+
+def test_ivf_assign_rejects_carry_with_n_best_before_planning(clustered):
+    """carry with n_best>1 is refused on entry: an unknown carried
+    column would otherwise fail analysis first and hide the real error."""
+    from merkonvectordb_spark.operators.ann import ivf_assign
+
+    with pytest.raises(ValueError, match="n_best=1"):
+        ivf_assign(
+            clustered, _ivf_cents(clustered), "vec_id", n_best=2,
+            carry=("no_such_col",),
+        )
+
+
+@pytest.mark.parametrize("name", ["cid", "cv", "__cos", "__b"])
+def test_ivf_assign_rejects_carry_colliding_with_internal_columns(
+    clustered, name
+):
+    from merkonvectordb_spark.operators.ann import ivf_assign
+
+    df = clustered.withColumn(name, F.lit(1))
+    with pytest.raises(ValueError, match="collide"):
+        ivf_assign(df, _ivf_cents(clustered), "vec_id", carry=(name,))
+
+
 def test_kmeans_refine_improves_quantization(clustered, spark):
     from merkonvectordb_spark.operators.ann import ivf_assign, kmeans_refine
     from merkonvectordb_spark.functions.vector import cosine_similarity

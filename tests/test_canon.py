@@ -1,7 +1,6 @@
 """Pin THE oracle-comparison canonicalization (merkonvectordb_spark.canon).
 
-Both verification channels — tools/oracle_check.py (the local gate
-stand-in) and merkonvectordb_spark/probe.py (the in-driver check) —
+tools/oracle_check.py (the local gate stand-in) and the registry tests
 hash result sets through these two functions.  A silent behavior change
 here desynchronizes every oracle verdict at once, so the exact rendering
 rules are pinned, plus the properties the hash-compare relies on

@@ -522,6 +522,33 @@ def test_minhash_store_incremental_probe(spark, tmp_path):
     assert (100, 1) in v1 and all(h != 3 for _, h in v1)
 
 
+def test_minhash_store_build_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """build_minhash_store writes its two tables from pool threads; the
+    jobs started there must carry the caller's job group, not run
+    ungrouped."""
+    from merkonvectordb_spark.operators.fingerprint_store import (
+        build_minhash_store,
+    )
+
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(
+        [(1, "many common words shared across documents"), (2, "other text")],
+        "doc_id LONG, text STRING",
+    )
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("minhash-build", "job-group inheritance check")
+    try:
+        build_minhash_store(spark, docs, str(tmp_path / "fp"))
+        grouped = set(tracker.getJobIdsForGroup("minhash-build"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert grouped
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
 def test_streaming_ingest_appends_fingerprint_store(spark, tmp_path):
     """The daily-ingest pipeline as a STREAM: each micro-batch is probed
     against the store (dups vs all history so far), then appended.  With

@@ -224,3 +224,29 @@ def test_probe_ledger_parses_and_covers_registry():
     best = ledger_best(path)
     covered = names & (set(best) | set(_PROSE_SLOPES))
     assert covered == names, f"unprobed: {sorted(names - covered)[:10]}"
+
+
+def test_queries_are_the_registered_functions_and_write_nothing(spark, sf_dir):
+    """``queries()`` hands out the registered callables themselves, with
+    no wrapper in between, and running a query at the correctness scale
+    factor leaves the repo root untouched (no ledger appended, no file
+    created)."""
+    import os
+
+    from merkonvectordb_spark import registry
+
+    qs = registry.queries()
+    assert set(qs) == set(registry._QUERIES)
+    for name, fn in qs.items():
+        assert fn is registry._QUERIES[name], name
+
+    def root_listing():
+        return {
+            e.name: (e.stat().st_size, e.stat().st_mtime_ns)
+            for e in os.scandir(_repo_root())
+        }
+
+    correctness_dir = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    before = root_listing()
+    qs["tpch_q12"](spark, correctness_dir).collect()
+    assert root_listing() == before

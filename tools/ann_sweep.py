@@ -33,7 +33,6 @@ def main() -> int:
         if len(sys.argv) > 1
         else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
-    os.environ.setdefault("ENVPROBE", "0")
     from pyspark.sql import functions as F
 
     from merkonvectordb_spark import free_persisted_blocks, get_spark

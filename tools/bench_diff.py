@@ -101,10 +101,9 @@ def solo_times(names: list[str], runs: int = 3) -> dict[str, float]:
     """Re-run the flagged queries PLUS the controls through bench.py in
     one fresh process (amortizing JVM/JIT warm-up across the batch the
     same way for every query) and return the reported best-of-N times.
-    BENCH_PROBE=0 keeps the env-fingerprint scan out of the process; a
-    filtered run never touches the BENCH_LOCAL artifact (bench.py
+    A filtered run never touches the BENCH_LOCAL artifact (bench.py
     guards this)."""
-    env = dict(os.environ, BENCH_PROBE="0", BENCH_RUNS=str(runs))
+    env = dict(os.environ, BENCH_RUNS=str(runs))
     batch = list(dict.fromkeys(list(names) + list(CONTROLS)))
     got = _bench_subprocess(batch, env)
     if got is not None:

@@ -29,7 +29,6 @@ def main() -> int:
     rnd = int(os.environ.get("SPARK_GRAFT_ROUND", "10"))
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, here)
-    os.environ.setdefault("ENVPROBE", "0")
 
     import __spark_entry__ as entrymod
     from merkonvectordb_spark import free_persisted_blocks, get_spark

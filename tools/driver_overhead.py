@@ -31,7 +31,6 @@ def main() -> int:
     only = sys.argv[1:]
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, here)
-    os.environ.setdefault("ENVPROBE", "0")
     import __spark_entry__ as entrymod
     from merkonvectordb_spark import free_persisted_blocks, get_spark
 

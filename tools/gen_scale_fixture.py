@@ -156,7 +156,6 @@ def main() -> int:
     # property).  SCALE_ZIPF_USERS=1 opts into the adversarial head for
     # skew-stress probes; slopes measured under it are about the
     # OUTPUT's growth on skewed data, not the implementation's.
-    # != "0" matches the repo env convention (bench.py BENCH_PROBE):
     # SCALE_ZIPF_USERS=0 must DISABLE, not enable (ADVICE r8)
     if os.environ.get("SCALE_ZIPF_USERS", "0") not in ("", "0"):
         uw = 1.0 / np.arange(1, n_users + 1) ** 0.7

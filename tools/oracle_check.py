@@ -22,8 +22,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# single source of truth shared with merkonvectordb_spark/probe.py — the
-# in-process probe's verdicts must be byte-identical to this gate's
+# single source of truth shared with tests/test_registry.py — its
+# fetch-path checks must hash exactly the bytes this gate hashes
 from merkonvectordb_spark.canon import canon_cell  # noqa: E402
 
 

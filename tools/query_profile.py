@@ -33,7 +33,6 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, here)
-    os.environ.setdefault("ENVPROBE", "0")
 
     logdir = f"/tmp/spark-events-{os.getpid()}"
     os.makedirs(logdir, exist_ok=True)
