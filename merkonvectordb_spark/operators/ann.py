@@ -71,47 +71,19 @@ DEDUP_N_BITS = 12
 DEDUP_PLANES = random_hyperplanes(n_bits=DEDUP_N_BITS, seed=13)
 
 
-def bucket_array(emb: Column, planes: list[list[list[float]]]) -> Column:
-    """Per-table LSH bucket ids: bit h of table t is ``sign(emb · plane)``;
-    bucket = Σ bit·2^h.
-
-    The planes ship as ONE nested array literal with the per-bit dot
-    products computed by nested higher-order functions — not as
-    tables×bits separate expression subtrees, whose thousands of literal
-    nodes blow codegen method sizes (measured several-× slower at
-    sf0.1)."""
-    n_bits = len(planes[0])
-    pows = F.lit([1 << h for h in range(n_bits)])
-    tables = F.lit(planes)  # array<array<array<double>>> — one literal node
-    return F.transform(
-        tables,
-        lambda table: F.aggregate(
-            F.zip_with(
-                table,
-                pows,
-                lambda plane, pw: F.when(
-                    dot_product(emb, plane) >= 0.0, pw
-                ).otherwise(F.lit(0)),
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ),
-    )
-
-
 def bucket_array_pandas(planes: list[list[list[float]]]):
-    """Arrow-vectorized bucket computation: one ``(batch × dim) @
+    """Per-table LSH bucket ids as an Arrow UDF: bit h of table t is
+    ``sign(emb · plane)``, bucket = Σ bit·2^h.  One ``(batch × dim) @
     (dim × tables·bits)`` numpy matmul per Arrow batch, then sign →
-    bit-pack.  This is the designed fast path: higher-order-function
-    expressions are CodegenFallback (interpreted per element), so the
-    expression form pays boxed per-element evaluation PLUS a
-    3000-literal plan — measured ~10 s for 2k rows vs milliseconds here.
+    bit-pack — the nested higher-order-function expression form is
+    CodegenFallback (interpreted per element) over a 3000-literal plan,
+    measured ~10 s for 2k rows against milliseconds here.
 
     Parity note: numpy's dot uses SIMD/pairwise summation while the
-    expression path (and the DuckDB oracle) folds left-to-right; a sign
-    can only differ when a dot product sits within float error of zero
-    (probability ~1e-7 per corpus; the oracle run pins it for the
-    fixtures).  ``bucket_array`` remains the fold-exact reference.
+    DuckDB oracle folds left-to-right; a sign can only differ when a
+    dot product sits within float error of zero (probability ~1e-7 per
+    corpus).  The oracle is the fold-exact reference and pins it for
+    the fixtures.
     """
     import numpy as np
 
@@ -137,23 +109,19 @@ def ann_index(
     id_col: str,
     emb_col: str = "embedding",
     planes: list[list[list[float]]] | None = None,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Materializable LSH index: ``(id, table_id, bucket)`` — n_tables rows
     per input row.  At scale, write this out partitioned/bucketed by
     (table_id, bucket) so probes are partition-pruned scans."""
     planes = planes or HYPERPLANES
     dim = len(planes[0][0])
-    bucket_fn = (
-        bucket_array_pandas(planes)(F.col(emb_col))
-        if vectorized
-        else bucket_array(F.col(emb_col), planes)
-    )
     return (
         df.where(F.size(F.col(emb_col)) == dim)
         .select(
             F.col(id_col),
-            F.posexplode(bucket_fn).alias("table_id", "bucket"),
+            F.posexplode(bucket_array_pandas(planes)(F.col(emb_col))).alias(
+                "table_id", "bucket"
+            ),
         )
     )
 

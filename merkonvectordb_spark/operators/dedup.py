@@ -28,6 +28,9 @@ MINHASH_P = 2_147_483_647  # 2^31 - 1 (prime)
 NUM_HASHES = 16
 LSH_BANDS = 8  # × 2 rows/band: P(candidate) = 1-(1-j²)^8 — 0.995 at j=0.7
 SHINGLE_N = 3
+# per-task shingle -> hash cache in shingle_analysis: cleared once it
+# reaches this many entries, so a long task's memory stays bounded
+_SHINGLE_CACHE_MAX = 1 << 18
 
 _rng = random.Random(2026)
 MINHASH_A = [_rng.randrange(1, MINHASH_P) for _ in range(NUM_HASHES)]
@@ -80,45 +83,6 @@ def keep_survivors(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def shingle_set(text: Column, n: int = SHINGLE_N) -> Column:
-    """Distinct n-word shingles of the normalized text."""
-    return F.array_distinct(word_shingles(text, n))
-
-
-def shingle_base_hashes(shingles: Column) -> Column:
-    """Per-shingle 60-bit base hash folded into the 31-bit prime field:
-    first 15 hex chars of md5 → BIGINT → mod P.  Pure JVM expressions;
-    the DuckDB oracle folds the same hex digits with list_reduce."""
-    return F.transform(
-        shingles,
-        lambda s: md5_hash60(s) % MINHASH_P,
-    )
-
-
-def minhash_signature(base_hashes: Column) -> Column:
-    """NUM_HASHES-long MinHash signature: sig_i = min over shingles of
-    (a_i·x + b_i) mod P.
-
-    ``base_hashes`` is bound once through a lambda variable — the 16
-    signature arms otherwise each embed (and re-evaluate) the md5-fold
-    transform feeding them."""
-
-    def _hash_fn(a: int, b: int):
-        # closure, not lambda-with-defaults: PySpark reads the lambda's
-        # arity to build the higher-order function
-        return lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P
-
-    def _sig(bases: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(F.transform(bases, _hash_fn(a, b)))
-                for a, b in zip(MINHASH_A, MINHASH_B)
-            ]
-        )
-
-    return F.element_at(F.transform(F.array(base_hashes), _sig), 1)
-
-
 def lsh_band_keys(sig: Column) -> Column:
     """BANDS string keys, each concatenating ROWS consecutive signature
     values — two docs collide in a band iff that slice matches exactly."""
@@ -133,45 +97,35 @@ def lsh_band_keys(sig: Column) -> Column:
     )
 
 
-def shingle_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """``(__id, __sh)`` distinct-shingle table, repartitioned to the full
-    core count first: the hash work is CPU-bound and scan-local, and a
-    compute-heavy-but-byte-light input (one small parquet file) would
-    otherwise run the whole pipeline on its 1-2 scan partitions."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-        .repartition(par)
-        .select("__id", shingle_set(F.col("__text")).alias("__sh"))
-        .where(F.size("__sh") > 0)
-    )
-
-
 def shingle_analysis(
     df: DataFrame, id_col: str, text_col: str, n: int = SHINGLE_N
 ) -> DataFrame:
-    """``(__id, __sh, __setkey, __sig)`` in ONE vectorized Arrow pass —
-    the fused form of ``shingle_sets`` + the collapse's set keying + the
-    MinHash signature fold, for consumers that need the hashes (banding
-    / collapse / calibration).  ``shingle_sets`` remains the
-    expression-form for hash-free consumers (Jaccard verify).
+    """``(__id, __sh, __setkey, __sig)`` in ONE Arrow pass: the
+    distinct shingles, the identical-set key and the MinHash signature
+    every banding / collapse / calibration consumer reads.  It is the
+    only shingle-hashing implementation in the package; hash-free
+    consumers (Jaccard verify) read its ``__sh`` column.
 
-    Value contract (pinned in ``test_dedup`` and by the oracle): every
-    column is bit-for-bit the JVM expression chain —
+    Value contract (pinned in ``test_dedup`` against a JVM expression
+    reference, and by the oracle): every column is bit-for-bit the JVM
+    expression chain —
     ``__sh = array_distinct(word_shingles(lower-split text))`` in
     first-occurrence order, ``__setkey = md5(concat_ws('',
     transform(array_sort(__sh), md5)))``, ``__sig`` the 16-arm
     ``(a·x + b) mod P`` fold over the md5[:15]-fold base hashes.  The
-    Python mirror is exact on this corpus: ASCII lower == JVM lower,
-    and the split pattern is Java's ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``
-    (NOT Python's Unicode-aware ``\\s``).  Empty shingle sets are
-    dropped, matching ``shingle_sets``'s ``size > 0`` filter.
+    case mapping is the JVM's own ``lower()``, selected into the Arrow
+    input — Python's ``str.lower()`` follows a different Unicode
+    version and disagrees on some code points (e.g. U+A7CB, U+10D50).
+    The split pattern is Java's ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``
+    (NOT Python's Unicode-aware ``\\s``).  Docs with no shingle are
+    dropped.
 
     Why Arrow here (guide §4 inverted): the JVM chain evaluates ~3
     interpreted higher-order transforms with two md5 calls per shingle
     plus 16 interpreted signature arms; the fused pass hashes each
-    distinct shingle ONCE (per-task cache), folds signatures in one
-    numpy matmul, and crosses the Arrow boundary once per doc batch.
+    distinct shingle ONCE (per-task cache, cleared past
+    ``_SHINGLE_CACHE_MAX`` entries), folds signatures in one numpy
+    matmul, and crosses the Arrow boundary once per doc batch.
     Interleaved A/B at sf0.1 (4 pairs, one process): chain front-half
     median 2.54 s → 2.04 s, every pair in favor."""
     spark = df.sparkSession
@@ -186,9 +140,10 @@ def shingle_analysis(
         ]
     )
     src = df.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__text")
+        F.col(id_col).alias("__id"), F.lower(F.col(text_col)).alias("__text")
     ).repartition(par)
     a_list, b_list, p = list(MINHASH_A), list(MINHASH_B), MINHASH_P
+    cache_max = _SHINGLE_CACHE_MAX
 
     def gen(batches):
         import hashlib
@@ -206,9 +161,9 @@ def shingle_analysis(
         for pdf in batches:
             ids, shs, keys, sigs = [], [], [], []
             for i, t in zip(pdf["__id"], pdf["__text"]):
-                toks = [w for w in ws.split((t or "").lower()) if w]
+                toks = [w for w in ws.split(t or "") if w]
                 if len(toks) < n:
-                    continue  # empty set — dropped like shingle_sets
+                    continue  # empty shingle set — dropped
                 grams = list(
                     dict.fromkeys(
                         " ".join(toks[j : j + n])
@@ -220,6 +175,8 @@ def shingle_analysis(
                 for k, g in enumerate(grams):
                     e = cache.get(g)
                     if e is None:
+                        if len(cache) >= cache_max:
+                            cache.clear()
                         h = md5(g.encode("utf-8")).hexdigest()
                         e = (h, int(h[:15], 16) % p)
                         cache[g] = e
@@ -243,21 +200,11 @@ def shingle_analysis(
 
 
 def band_rows(sets_df: DataFrame) -> DataFrame:
-    """``(__id, band_id, band_key)`` LSH band rows of a shingle-set
-    table — the joinable (and persistable: see
-    ``operators.fingerprint_store``) form of the MinHash index.  A
-    frame carrying a precomputed ``__sig`` (``shingle_analysis``)
-    skips the expression-form signature fold."""
-    if "__sig" in sets_df.columns:
-        sigs = sets_df.select("__id", "__sig")
-    else:
-        sigs = sets_df.select(
-            "__id",
-            minhash_signature(shingle_base_hashes(F.col("__sh"))).alias(
-                "__sig"
-            ),
-        )
-    return sigs.select(
+    """``(__id, band_id, band_key)`` LSH band rows of a
+    ``shingle_analysis`` frame (or its collapsed ``rep_sets``) — the
+    joinable (and persistable: see ``operators.fingerprint_store``)
+    form of the MinHash index."""
+    return sets_df.select(
         "__id",
         F.posexplode(lsh_band_keys(F.col("__sig"))).alias("band_id", "band_key"),
     )
@@ -269,10 +216,9 @@ def collapse_identical_sets(
     """Identical-shingle-set collapse, exposed for pair-semantics
     consumers (round 9): returns ``(membership, rep_sets)`` where
     ``membership`` is ``(__id, __rep)`` (every doc → min-id holder of
-    its exact set) and ``rep_sets`` is the ``(__id, __sh)`` table
-    restricted to representatives (carrying ``__sig`` through when the
-    input is a ``shingle_analysis`` frame, so banding skips the
-    signature recompute).
+    its exact set) and ``rep_sets`` is the ``(__id, __sh, __sig)``
+    table restricted to representatives.  ``sets_df`` is a
+    ``shingle_analysis`` frame: its ``__setkey`` is the set key.
 
     Identical sets have identical MinHash signatures, identical band
     keys, and identical Jaccard against every third set — so banding,
@@ -282,7 +228,7 @@ def collapse_identical_sets(
     pairs (the license-boilerplate adversary; the key scheme: md5 over
     the sorted set with each element md5-hashed first, so the
     fixed-width concatenation is not injectable — ONE copy of it lives
-    here).
+    in ``shingle_analysis``).
 
     Both returned frames are EAGER localCheckpoints: the keyed frame
     (shingle sets + set key) is cached once, both outputs materialize
@@ -291,20 +237,7 @@ def collapse_identical_sets(
     downstream materialization — and the transient cache is released
     before returning.  Lineage is cut, so callers may drop any upstream
     cache immediately and need no checkpoint of their own."""
-    if "__setkey" in sets_df.columns:
-        # shingle_analysis input: the key (and signature) were computed
-        # in the fused Arrow pass — bit-identical scheme, one copy of
-        # which still lives in the expression below for plain
-        # shingle-set frames (tests pin the two forms equal).
-        keyed = sets_df.persist()
-    else:
-        keyed = sets_df.withColumn(
-            "__setkey",
-            F.md5(F.concat_ws("", F.transform(F.array_sort("__sh"), F.md5))),
-        ).persist()
-    rep_cols = ["__id", "__sh"] + (
-        ["__sig"] if "__sig" in sets_df.columns else []
-    )
+    keyed = sets_df.persist()
     try:
         reps = keyed.groupBy("__setkey").agg(F.min("__id").alias("__rep"))
         mem_plan = (
@@ -314,7 +247,7 @@ def collapse_identical_sets(
         )
         rep_plan = (
             keyed.join(reps.select(F.col("__rep").alias("__id")), "__id")
-            .select(*rep_cols)
+            .select("__id", "__sh", "__sig")
         )
         # materialize BOTH eager checkpoints concurrently (guide §2.6
         # overlap independent jobs): they are independent consumers of
@@ -398,10 +331,6 @@ def candidate_pairs_from_sets(
         .select(F.col("l.__id").alias("a"), F.col("r.__id").alias("b"))
         .distinct()
     )
-
-
-def candidate_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return candidate_pairs_from_sets(shingle_analysis(df, id_col, text_col))
 
 
 def leakage_audit(
@@ -623,18 +552,6 @@ def jaccard_edges_from_sets(
         .join(b_sets, "b")
         .where(jac >= F.lit(threshold))
         .select("a", "b")
-    )
-
-
-def jaccard_edges(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-) -> DataFrame:
-    return jaccard_edges_from_sets(
-        shingle_sets(df, id_col, text_col), pairs, threshold
     )
 
 

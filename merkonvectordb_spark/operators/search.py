@@ -22,10 +22,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from merkonvectordb_spark.functions.vector import (
     cosine_similarity,
-    cosine_similarity_pandas,
     dot_product,
     l2_normalize,
     vector_literal,
@@ -72,7 +72,6 @@ def knn(
     with_embeddings: bool = False,
     embedding_col: str = "embedding",
     tie_break: str | None = "ingest_seq",
-    use_pandas: bool = False,
     assume_normalized: bool = False,
 ) -> DataFrame:
     """Top-k rows by cosine similarity to ``query``.
@@ -114,8 +113,6 @@ def knn(
             empty = vectors.limit(0).withColumn("score", F.lit(0.0))
             return empty if with_embeddings else empty.drop(embedding_col)
         score = dot_product(F.col(embedding_col), vector_literal(uq))
-    elif use_pandas:
-        score = cosine_similarity_pandas(query)(F.col(embedding_col))
     else:
         score = cosine_similarity(F.col(embedding_col), vector_literal(query))
     # threshold + ordering act on the RAW score (the reference filters the
@@ -228,32 +225,31 @@ def mmr_rerank(
     lam: float = 0.5,
     query_id_col: str = "query_id",
     id_col: str = "vec_id",
-    strategy: str = "local",
 ) -> DataFrame:
     """Maximal-marginal-relevance diversification over a per-query
     candidate set: greedily pick the candidate maximizing
     ``lam * sim(q, d) - (1 - lam) * max_{s in selected} sim(d, s)``.
 
-    Two physical strategies with IDENTICAL results:
-
-    * ``"local"`` (default): cogroup ``cand`` and ``psim`` on query_id
-      and run the whole greedy loop per query inside one
-      ``applyInPandas`` task — ONE shuffle, one job, regardless of k.
-      Candidate sets are re-rank-width by construction (top-N per
-      query), so a group always fits a task; with millions of queries
-      every group solves in parallel.  This is the shape a large
-      deployment wants: the iterative form's latency is k-1 sequential
-      cluster-wide jobs, the local form's is one.
-    * ``"iterative"``: the k-1-step dataflow loop below — kept for the
-      degenerate case of candidate sets too wide for one task.
+    ``cand`` and ``psim`` are cogrouped on query_id and the whole greedy
+    loop runs per query inside one ``applyInPandas`` task — ONE shuffle,
+    one job, regardless of k.  Candidate sets are re-rank-width by
+    construction (top-N per query), so a group always fits a task; with
+    millions of queries every group solves in parallel, and cost follows
+    re-rank width, never corpus size.  Candidate generation upstream is
+    the existing top-k machinery.
 
     ``cand`` carries ``(query_id, vec_id, qs)`` (raw query-relevance,
     UNROUNDED — rounding happens at output only) and ``psim`` the raw
     pairwise sims ``(query_id, a, b, sim)`` among that query's
-    candidates.  Expressed as k-1 dataflow iterations over the
-    candidate-width frames — the frames are (queries × top-N) rows, so
-    cost follows re-rank width, never corpus size; candidate generation
-    upstream is the existing top-k machinery.  Ties break on lowest id.
+    candidates.
+
+    Exact-parity notes: the objective is the double arithmetic
+    ``lam*qs - (1-lam)*max_sim``; ties break on desc objective, then asc
+    id; a candidate with NO pairwise row against any selected item
+    scores max_sim 0 (maximally diverse — an incomplete or
+    one-directional ``psim`` never shrinks the result set); rounding
+    happens in the SPARK layer (``F.round``, HALF_UP) — Python's
+    banker's ``round`` would diverge on .xxxxx5 ticks.
 
     Use ``lam`` values exactly representable in binary (0.5, 0.25,
     0.75): the oracle interpolates the SAME literals, and an
@@ -263,97 +259,10 @@ def mmr_rerank(
     is its raw relevance (greedy seed), later ranks the MMR objective.
     """
     qk, ik = query_id_col, id_col
-    # unscorable candidates (NULL/NaN relevance) are excluded up front,
-    # identically for both strategies: Spark's window would order NaN
-    # LARGEST (seeding on garbage) while a Python max would propagate
-    # it differently — the contract is that ``qs`` is a real score
+    # unscorable candidates (NULL/NaN relevance) are excluded up front:
+    # a Python max would propagate NaN as a seed — the contract is that
+    # ``qs`` is a real score
     cand = cand.where(F.col("qs").isNotNull() & (~F.isnan("qs")))
-    if strategy == "local":
-        return _mmr_rerank_local(cand, psim, k, lam, qk, ik)
-    if strategy != "iterative":
-        raise ValueError(f"unknown mmr strategy: {strategy!r}")
-    # the loop re-references cand/psim every iteration and the selected
-    # set's lineage grows per step — persist the invariants and cut the
-    # accumulator's lineage (same persist-or-recompute law PageRank
-    # measured; without this, k-1 iterations re-run the candidate
-    # scoring DAG k-1 times over)
-    cand = cand.persist()
-    psim = psim.persist()
-    w_seed = Window.partitionBy(qk).orderBy(F.desc("qs"), F.asc(ik))
-    selected = (
-        cand.withColumn("__rn", F.row_number().over(w_seed))
-        .where(F.col("__rn") == 1)
-        .select(
-            qk,
-            ik,
-            F.lit(1).alias("sel_rank"),
-            F.col("qs").alias("__mscore"),
-        )
-    ).localCheckpoint()
-    for r in range(2, k + 1):
-        rem = cand.join(selected.select(qk, ik), [qk, ik], "left_anti")
-        ms = (
-            psim.join(
-                selected.select(qk, F.col(ik).alias("__sel")),
-                [qk],
-            )
-            .where(F.col("b") == F.col("__sel"))
-            .groupBy(qk, "a")
-            .agg(F.max("sim").alias("__ms"))
-            .withColumnRenamed("a", ik)
-        )
-        # LEFT join: a candidate with no pairwise-sim row against any
-        # selected item is maximally diverse (sim 0), not silently
-        # droppable — an incomplete/one-directional psim otherwise
-        # shrinks the result set without error
-        scored = (
-            rem.join(ms, [qk, ik], "left")
-            .withColumn("__ms", F.coalesce("__ms", F.lit(0.0)))
-            .withColumn(
-                "__mmr",
-                F.lit(float(lam)) * F.col("qs")
-                - F.lit(float(1.0 - lam)) * F.col("__ms"),
-            )
-        )
-        w = Window.partitionBy(qk).orderBy(F.desc("__mmr"), F.asc(ik))
-        pick = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select(
-                qk,
-                ik,
-                F.lit(r).alias("sel_rank"),
-                F.col("__mmr").alias("__mscore"),
-            )
-        )
-        selected = selected.unionByName(pick).localCheckpoint()
-    out = selected.withColumn(
-        "mmr_score", F.round(F.col("__mscore"), 6)
-    ).drop("__mscore")
-    cand.unpersist()
-    psim.unpersist()
-    return out
-
-
-def _mmr_rerank_local(
-    cand: DataFrame,
-    psim: DataFrame,
-    k: int,
-    lam: float,
-    qk: str,
-    ik: str,
-) -> DataFrame:
-    """The cogrouped strategy: whole greedy loop per query in one task.
-
-    Exact-parity notes: same double arithmetic as the dataflow form
-    (``lam*qs - (1-lam)*max_sim``), same tie-breaks (desc objective,
-    asc id), a candidate with NO pairwise row against any selected item
-    scores max_sim 0 (maximally diverse, mirroring the LEFT-join
-    coalesce), and rounding happens in the SPARK layer (``F.round``,
-    HALF_UP) — Python's banker's ``round`` would diverge on .xxxxx5
-    ticks."""
-    from pyspark.sql import types as T
-
     lam_f = float(lam)
     one_m = float(1.0 - lam)
     out_schema = T.StructType(

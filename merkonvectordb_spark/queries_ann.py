@@ -596,9 +596,9 @@ sel{r} AS (SELECT * FROM sel{r - 1} UNION ALL SELECT * FROM s{r})"""
 @register("mmr_rerank", _mmr_oracle())
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diversified retrieval: exact top-10 candidates per query, then
-    5-step greedy MMR (lambda=0.5) as iterative dataflow over the
-    candidate-width frames — diversification cost follows re-rank width,
-    never corpus size."""
+    5-step greedy MMR (lambda=0.5), each query's loop solved in one
+    cogrouped task over its candidate-width frames — diversification
+    cost follows re-rank width, never corpus size."""
     from merkonvectordb_spark.functions.vector import cosine_similarity
     from merkonvectordb_spark.operators.search import mmr_rerank
     from pyspark.sql import Window

@@ -83,7 +83,7 @@ def test_near_dedup_exact_precollapse_is_equivalent_and_linear(spark):
     from merkonvectordb_spark.operators.dedup import (
         candidate_pairs_from_sets,
         near_dedup,
-        shingle_sets,
+        shingle_analysis,
     )
 
     base = ("the quick brown fox jumps over the lazy dog while spark "
@@ -107,7 +107,7 @@ def test_near_dedup_exact_precollapse_is_equivalent_and_linear(spark):
     assert fast[200] == (200, 1) and fast[300] == (300, 1)
     # the pair stage sees ONE representative for the 40 identical docs:
     # without collapse the mega-group alone contributes 40*39/2 pairs
-    sets_df = shingle_sets(df, "doc_id", "text")
+    sets_df = shingle_analysis(df, "doc_id", "text")
     uncollapsed_pairs = candidate_pairs_from_sets(sets_df).count()
     reps = sets_df.select("__sh").distinct().count()
     assert uncollapsed_pairs >= 40 * 39 // 2
@@ -115,9 +115,14 @@ def test_near_dedup_exact_precollapse_is_equivalent_and_linear(spark):
 
 
 def test_candidate_pairs_not_all_pairs(spark):
-    from merkonvectordb_spark.operators.dedup import candidate_pairs
+    from merkonvectordb_spark.operators.dedup import (
+        candidate_pairs_from_sets,
+        shingle_analysis,
+    )
 
-    df = candidate_pairs(_near_corpus(spark), "doc_id", "text")
+    df = candidate_pairs_from_sets(
+        shingle_analysis(_near_corpus(spark), "doc_id", "text")
+    )
     plan = executed_plan(df)
     # the bucket self-join must be an equi-join on (band_id, band_key),
     # never a cartesian/nested-loop product
@@ -222,36 +227,55 @@ def test_simhash_arrow_path_matches_expression(spark, sf_dir):
 
 
 def test_shingle_analysis_matches_expression_chain(spark, sf_dir):
-    """Round 11: the banding/collapse consumers swapped the shingle →
-    setkey → MinHash-signature chain (3 interpreted higher-order
-    transforms, two md5 calls per shingle, 16 interpreted arms) for ONE
-    fused Arrow pass (``shingle_analysis``).  Every column must be
-    VALUE-identical to the expression forms — same shingle lists in
-    first-occurrence order, same md5-over-sorted-md5s set key, same
-    16-arm prime-field signature — on real fixture text and on
-    whitespace/unicode/edge docs, with empty shingle sets dropped like
-    ``shingle_sets``'s ``size > 0`` filter."""
+    """``shingle_analysis`` (the package's one fused Arrow pass) against
+    the shingle → setkey → MinHash-signature chain written as JVM
+    expressions, kept here as the reference.  Every column must be
+    VALUE-identical to it — same shingle lists in first-occurrence
+    order, same md5-over-sorted-md5s set key, same 16-arm prime-field
+    signature — on real fixture text and on whitespace/unicode/edge
+    docs, with empty shingle sets dropped."""
+    from merkonvectordb_spark.functions.hashing import md5_hash60
+    from merkonvectordb_spark.functions.text import word_shingles
     from merkonvectordb_spark.operators.dedup import (
-        minhash_signature,
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_P,
+        SHINGLE_N,
         shingle_analysis,
-        shingle_base_hashes,
-        shingle_sets,
     )
     from merkonvectordb_spark.schema import load_table
 
+    def hash_fn(a, b):
+        # closure, not lambda-with-defaults: PySpark reads the lambda's
+        # arity to build the higher-order function
+        return lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P
+
+    def sig_arms(bases):
+        return F.array(
+            *[
+                F.array_min(F.transform(bases, hash_fn(a, b)))
+                for a, b in zip(MINHASH_A, MINHASH_B)
+            ]
+        )
+
     def jvm(df):
+        sh = F.array_distinct(word_shingles(F.col("text"), SHINGLE_N))
+        # md5[:15] base hashes folded into the prime field, bound once
+        # through a lambda variable for the 16 signature arms
+        bases = F.transform(F.col("__sh"), lambda s: md5_hash60(s) % MINHASH_P)
         return {
             r["__id"]: (list(r["__sh"]), r["__setkey"], list(r["__sig"]))
-            for r in shingle_sets(df, "doc_id", "text")
+            for r in df.select(F.col("doc_id").alias("__id"), sh.alias("__sh"))
+            .where(F.size("__sh") > 0)
             .select(
                 "__id",
                 "__sh",
                 F.md5(
                     F.concat_ws("", F.transform(F.array_sort("__sh"), F.md5))
                 ).alias("__setkey"),
-                minhash_signature(
-                    shingle_base_hashes(F.col("__sh"))
-                ).alias("__sig"),
+                F.element_at(F.transform(F.array(bases), sig_arms), 1).alias(
+                    "__sig"
+                ),
             )
             .collect()
         }
@@ -274,12 +298,16 @@ def test_shingle_analysis_matches_expression_chain(spark, sf_dir):
             (5, " \t\r\n "),      # whitespace only -> dropped
             (6, "one two"),       # below the shingle window -> dropped
             (7, "a b c a b c a b c d"),  # duplicate shingles collapse
+            # code points whose case mapping differs between the JVM's
+            # Unicode tables and Python's str.lower()
+            (8, "\uA7CB tall shingle with capital ramshorn"),
+            (9, "garay \U00010D50 capital letter in these words"),
         ],
         "doc_id LONG, text STRING",
     )
     ewant, egot = jvm(edge), arrow(edge)
     assert egot == ewant
-    assert set(egot) == {1, 2, 7}
+    assert set(egot) == {1, 2, 7, 8, 9}
 
 
 # ---------------------------------------------------------------------------
@@ -708,7 +736,7 @@ def test_leakage_quarantine_histogram_matches_pair_form(spark):
         candidate_pairs_from_sets,
         jaccard_edges_from_sets,
         leakage_quarantine,
-        shingle_sets,
+        shingle_analysis,
     )
     from merkonvectordb_spark.operators.pipeline import hash_split
 
@@ -732,7 +760,7 @@ def test_leakage_quarantine_histogram_matches_pair_form(spark):
     }
 
     # naive reference: materialize candidate pairs, verify, label, count
-    sets = shingle_sets(df, "doc_id", "text").localCheckpoint(eager=True)
+    sets = shingle_analysis(df, "doc_id", "text").localCheckpoint(eager=True)
     edges = jaccard_edges_from_sets(
         sets, candidate_pairs_from_sets(sets), 0.6
     )
@@ -839,7 +867,7 @@ def test_band_freq_cap_semantics(spark):
         candidate_pairs_from_sets,
         leakage_audit,
         near_dedup,
-        shingle_sets,
+        shingle_analysis,
     )
 
     base = (
@@ -851,7 +879,7 @@ def test_band_freq_cap_semantics(spark):
         rows.append((i, f"{base} extra{i} filler{i}"))
         rows.append((i + 100, f"{base} extra{i} filler{i} tail"))
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    sets = shingle_sets(df, "doc_id", "text").localCheckpoint(eager=True)
+    sets = shingle_analysis(df, "doc_id", "text").localCheckpoint(eager=True)
 
     exact = {(r.a, r.b) for r in candidate_pairs_from_sets(sets).collect()}
     capped = {

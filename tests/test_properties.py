@@ -267,14 +267,14 @@ def test_band_cap_monotone_subset(spark, texts, caps):
     cap ≥ corpus size is exactly the identity."""
     from merkonvectordb_spark.operators.dedup import (
         candidate_pairs_from_sets,
-        shingle_sets,
+        shingle_analysis,
     )
 
     cap_lo, cap_hi = caps
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id LONG, text STRING"
     )
-    sets = shingle_sets(df, "doc_id", "text").localCheckpoint(eager=True)
+    sets = shingle_analysis(df, "doc_id", "text").localCheckpoint(eager=True)
     exact = {(r.a, r.b) for r in candidate_pairs_from_sets(sets).collect()}
     lo = {
         (r.a, r.b)

@@ -60,7 +60,7 @@ def main() -> int:
         candidate_pairs_from_sets,
         collapse_identical_sets,
         jaccard_edges_from_sets,
-        shingle_sets,
+        shingle_analysis,
     )
     from merkonvectordb_spark.queries_dedup import near_corpus
 
@@ -68,7 +68,7 @@ def main() -> int:
     print("| fixture | cap | candidates | rep edges | edge recall |")
     print("|---|---|---|---|---|")
     for d, sf in dirs:
-        sets_all = shingle_sets(near_corpus(spark, d), "doc_id", "text")
+        sets_all = shingle_analysis(near_corpus(spark, d), "doc_id", "text")
         # collapse returns eager checkpoints — no extra checkpoint needed
         _membership, rep_sets = collapse_identical_sets(sets_all)
         base_edges = None

@@ -108,8 +108,7 @@ ALLOW: dict[tuple[str, str], str] = {
         "shape as knn_batch_ivf)",
     ("mmr_rerank", "nested_loop"):
         "fixed query batch (Q=5) broadcast for candidate scoring — "
-        "|corpus|×Q, Q constant (the iterative strategy's checkpoints "
-        "used to hide this same join from the final plan)",
+        "|corpus|×Q, Q constant",
     ("semantic_dedup", "nested_loop"):
         "fixed-K centroid set broadcast for cluster assignment (same "
         "shape as knn_batch_ivf)",
