@@ -1,4 +1,4 @@
-"""Vector math as Catalyst expressions (+ a pandas_udf fast path).
+"""Vector math as Catalyst expressions (+ their numpy batch form).
 
 Reference behavior being re-expressed: float32 cosine similarity
 (``TensorPrimitives.CosineSimilarity``, MerkonMemoryStore.cs:137) — NaN on
@@ -8,14 +8,18 @@ zero-norm vectors, used with an inclusive ``>=`` relevance threshold
 Design notes for 100 TB scale:
 
 * The default ``cosine_similarity`` is pure built-in expressions
-  (``zip_with`` + ``aggregate``) — it runs JVM-side inside whole-stage
-  codegen, no Python worker, no Arrow hop.  Summation is sequential in
+  (``zip_with`` + ``aggregate``) — it runs JVM-side, no Python worker,
+  no Arrow hop, but interpreted: higher-order functions fall back from
+  whole-stage codegen.  Summation is sequential in
   element order, in DOUBLE, so results are deterministic and bit-identical
   to any other engine that folds left-to-right in double (the DuckDB
   oracle's ``list_dot_product`` over ``DOUBLE[]`` matches).
-* ``cosine_similarity_pandas`` is the Arrow/numpy batch path: for very wide
-  embeddings (d ≥ ~512) numpy's SIMD dot beats the per-element codegen
-  loop.  Same semantics (NaN on zero norm), float64 accumulation.
+* ``fold_dot``/``fold_cosine`` are the numpy form of the same folds for
+  Arrow batch kernels (``cosine_similarity_pandas``, ``knn_batch``): one
+  vectorized multiply-add per coordinate, left to right in float64, so
+  every pair sees the expression's exact IEEE operation sequence and the
+  scores are bit-identical to it.  Never ``@``/``np.dot``/``einsum``:
+  BLAS reorders the summation and differs in the last bits.
 * Pre-normalizing the corpus once (``l2_normalize`` at ingest) turns every
   query's cosine into a plain dot product — at scale that halves the
   per-query FLOPs and is the layout a real deployment should use.
@@ -89,33 +93,57 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when(denom > 0.0, dot_product(a, b) / denom)
 
 
+def fold_dot(a, b):
+    """Dot products over the last axis of ``a`` and ``b`` (leading axes
+    broadcast), in float64 and summed left to right:
+    ``((0 + a0*b0) + a1*b1) + ...`` — per pair the operation sequence of
+    the ``dot_product`` fold, so the result is bit-identical to it.
+    ``fold_dot(A[:, None, :], Q[None, :, :])`` scores n rows against m
+    queries as an (n, m) matrix.  NaN elements give NaN."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    # coordinate-major copies: each step reads one contiguous slice
+    a_t = np.ascontiguousarray(np.moveaxis(a, -1, 0))
+    b_t = np.ascontiguousarray(np.moveaxis(b, -1, 0))
+    out = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a_t.shape[0]):
+        out += a_t[j] * b_t[j]
+    return out
+
+
+def fold_cosine(a, b):
+    """``cosine_similarity`` in numpy: ``dot / (sqrt(|a|²)·sqrt(|b|²))``
+    with every fold from ``fold_dot`` (bit-identical to the expression),
+    NaN where the denominator is not positive or an element is NaN."""
+    import numpy as np
+
+    denom = np.sqrt(fold_dot(a, a)) * np.sqrt(fold_dot(b, b))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0.0, fold_dot(a, b) / denom, np.nan)
+
+
 def cosine_similarity_pandas(query: Sequence[float]):
     """Arrow-batched numpy cosine vs a fixed query vector.
 
     Returns a pandas_udf Column-builder: ``df.withColumn("score",
     cosine_similarity_pandas(q)(F.col("embedding")))``.  The query vector is
     captured in the closure (small — pickled once per task, not per row).
-    ~10-100× over row-at-a-time Python; on par with or better than the
-    codegen loop for wide vectors.
+    ~10-100× over row-at-a-time Python.
 
-    Zero-norm rows (either side) produce NULL — same semantics as
-    ``cosine_similarity`` (np.nan becomes NULL across the Arrow boundary).
+    Scores are ``fold_cosine``'s, bit-identical to ``cosine_similarity``;
+    zero-norm rows (either side) produce NULL, the same as the expression
+    (np.nan becomes NULL across the Arrow boundary).
     """
     import numpy as np
 
     q = np.asarray(list(query), dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
 
     @F.pandas_udf(T.DoubleType())
     def _cos(col: pd.Series) -> pd.Series:
         # stack the Arrow list column into a (batch, dim) matrix
-        mat = np.vstack(col.to_numpy())
-        if mat.dtype != np.float64:
-            mat = mat.astype(np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1)) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = (mat @ q) / norms
-        out[norms == 0.0] = np.nan  # NaN → NULL across Arrow: the contract
-        return pd.Series(out)
+        out = fold_cosine(np.vstack(col.to_numpy()), q)
+        return pd.Series(out)  # NaN → NULL across Arrow: the contract
 
     return _cos

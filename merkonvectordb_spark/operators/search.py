@@ -12,22 +12,24 @@ Plan shape at scale (verified via .explain):
 * ``orderBy(desc).limit(k)`` plans as TakeOrderedAndProject: per-partition
   heap top-k + driver merge — O(N log k), no full shuffle/sort.  At 1000
   executors this is a single reduce of 1000·k rows, not a 100 TB sort;
-* batch form broadcasts the query set and computes per-query top-k with a
-  window — one corpus scan for Q queries instead of Q scans.
+* batch form collects the query set once and scores the corpus in one
+  Arrow kernel with a per-batch top-k pre-limit, then cuts per-query
+  top-k with a window — one corpus scan for Q queries instead of Q scans.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from merkonvectordb_spark.functions.vector import (
     cosine_similarity,
     dot_product,
-    l2_normalize,
     vector_literal,
 )
 
@@ -118,11 +120,10 @@ def knn(
     # threshold + ordering act on the RAW score (the reference filters the
     # raw similarity, MerkonMemoryStore.cs:138); rounding is output-only —
     # filtering a rounded score would admit e.g. 0.5999996 at t=0.6.
-    # no spread_small_scan here (unlike knn_batch): single-query scoring
-    # is one dot/cosine fold per row — measured round 10, the round-robin
-    # exchange cost ≈ the serial compute it spreads (knn_topk 0.39 s →
-    # 0.57-0.90 s), a net loss; the batch form's Q-fold work is what
-    # justifies the exchange
+    # no spread_small_scan here: single-query scoring is one dot/cosine
+    # fold per row — measured round 10, the round-robin exchange cost ≈
+    # the serial compute it spreads (knn_topk 0.39 s → 0.57-0.90 s), a
+    # net loss
     df = df.withColumn("__raw", score)
     df = df.where(_scoreable_at_least(F.col("__raw"), min_score))
     order = [F.desc("__raw")]
@@ -139,6 +140,9 @@ def knn(
     return df
 
 
+_QUERY_CHUNK = 256  # queries per kernel score matrix (see knn_batch)
+
+
 def knn_batch(
     vectors: DataFrame,
     queries: DataFrame,
@@ -152,70 +156,144 @@ def knn_batch(
 ) -> DataFrame:
     """Per-query top-k for a whole query SET in one corpus scan.
 
-    ``assume_normalized=True``: the corpus embeddings are unit vectors
-    (pre-normalized layout); query vectors are normalized ONCE in the
-    Q-row broadcast projection (zero-norm queries drop — unscorable),
-    and scoring is a single dot fold per (row, query) pair instead of
-    three.  The amortization argument: cosine costs 3 folds per pair;
-    with the corpus normalized once (3 folds per ROW, off the per-query
-    path), Q queries cost N·Q folds instead of 3·N·Q.
-
     Not in the reference (its API is one query at a time) but required at
-    Spark scale (SURVEY §2.4 batch form): broadcast the (small) query set,
-    cross-join against the corpus — Catalyst plans BroadcastNestedLoopJoin,
-    so the 100 TB side streams once — then per-query top-k via
-    ``row_number() <= k`` over ``Window.partitionBy(qid)``.
+    Spark scale (SURVEY §2.4 batch form).  The (small) query set is
+    collected once on the driver — the same Q rows a broadcast would
+    ship — and grouped by dimension.  One ``mapInArrow`` kernel
+    (``_topk_kernel``) streams the corpus once, scores each Arrow batch
+    against the queries of its rows' width with ``fold_cosine`` (or
+    ``fold_dot``), drops unscorable and below-threshold pairs, and emits
+    per query only the batch's rows scoring at least its k-th largest raw
+    score (ties kept).  ``row_number() <= k`` over
+    ``Window.partitionBy(qid)`` then makes the exact cut.
 
-    **Two-phase at the physical layer:** Spark ≥3.5 rewrites this window
-    into ``WindowGroupLimit Partial`` (map-side per-partition top-k heap,
-    bounded at k rows per query per input partition) → Exchange of
-    ≤ Q·P·k survivors → ``WindowGroupLimit Final``.  The scored N·Q
-    cross-product is therefore never shuffled — only k·Q rows per input
-    partition move.  ``tests/test_search.py`` pins this plan shape so a
-    config/version regression (which would reintroduce the full N·Q
-    shuffle into Q reducer tasks — a 100 TB scale-killer) fails loudly.
+    Scores are bit-identical to the ``cosine_similarity``/``dot_product``
+    expressions (left-to-right float64 folds; ``tests/test_search.py``
+    pins the whole output equal to the expression cross-join plan).  The
+    fold runs vectorized over rows × queries instead of as three
+    interpreted higher-order folds per pair, and the pre-limit is exact:
+    a row in a query's global top-k under (raw desc, tie_break asc) has
+    fewer than k rows scoring above it in its own batch.
+
+    ``assume_normalized=True``: the corpus embeddings are unit vectors
+    (pre-normalized layout); each query is normalized once on the driver
+    by ``unit_query`` (zero-norm queries drop — unscorable), and a
+    pair's score is the dot fold alone.
+
+    **Two-phase at the physical layer:** Spark ≥3.5 rewrites the window
+    into ``WindowGroupLimit Partial`` (map-side top-k per query per input
+    partition) → Exchange of ≤ Q·P·k survivors → ``WindowGroupLimit
+    Final``.  ``tests/test_search.py`` pins this plan shape so a
+    config/version regression (a full score shuffle into Q reducer
+    tasks) fails loudly.
     """
-    qproj = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(query_embedding_col).alias("__qvec"),
-    )
-    if assume_normalized:
-        # normalize each query once in the Q-row frame — NEVER per
-        # corpus row; zero-norm queries are unscorable and drop here
-        qproj = qproj.withColumn(
-            "__qvec", l2_normalize(F.col("__qvec"))
-        ).where(F.col("__qvec").isNotNull())
-    q = F.broadcast(qproj)
     corpus = vectors
     if "key" in corpus.columns:
         corpus = corpus.where(F.col("key").isNotNull() & (F.col("key") != ""))
-    score = (
-        dot_product(F.col(embedding_col), F.col("__qvec"))
-        if assume_normalized
-        else cosine_similarity(F.col(embedding_col), F.col("__qvec"))
+    qid_type = queries.schema[query_id_col].dataType
+    qids, by_dim = [], {}
+    qrows = (
+        queries.select(query_id_col, query_embedding_col).collect()
+        if k > 0 else []
     )
-    from merkonvectordb_spark.operators.skew import spread_small_scan
-
-    # per-(row, query) scoring is CPU-bound fold arithmetic and the
-    # BroadcastNestedLoopJoin runs on the corpus's OWN partitioning — a
-    # narrow small-file scan would score serially; no-op at cluster scale
-    scored = (
-        spread_small_scan(corpus).crossJoin(q)
-        .where(F.size(F.col(embedding_col)) == F.size(F.col("__qvec")))
-        .withColumn("__raw", score)
-        .where(_scoreable_at_least(F.col("__raw"), min_score))
+    for qid, vec in qrows:
+        if not vec:  # NULL or empty: unscorable
+            continue
+        v = np.array(vec, dtype=np.float64)  # a NULL element becomes NaN
+        if assume_normalized:
+            v = unit_query(v)  # None for a zero-norm query: it drops
+            if v is None:
+                continue
+        by_dim.setdefault(len(v), []).append((len(qids), v))
+        qids.append(qid)
+    # chunks of at most _QUERY_CHUNK queries bound the kernel's (rows ×
+    # queries) score matrices: ~20 MB each at the default 10k-row batch
+    groups = [
+        (np.array([i for i, _ in qs[lo : lo + _QUERY_CHUNK]]),
+         np.stack([v for _, v in qs[lo : lo + _QUERY_CHUNK]]))
+        for qs in by_dim.values()
+        for lo in range(0, len(qs), _QUERY_CHUNK)
+    ]
+    qid_arrow = to_arrow_type(qid_type)
+    out_schema = T.StructType(
+        [f for f in corpus.schema.fields if f.name != embedding_col]
+        + [
+            T.StructField("__qid", qid_type),
+            T.StructField("__raw", T.DoubleType()),
+        ]
+    )
+    kernel = _topk_kernel(
+        embedding_col, groups, qids, qid_arrow, k, float(min_score),
+        assume_normalized,
     )
     order = [F.desc("__raw")]
     if tie_break and tie_break in vectors.columns:
         order.append(F.asc(tie_break))
     w = Window.partitionBy("__qid").orderBy(*order)
     return (
-        scored.withColumn("__rn", F.row_number().over(w))
+        corpus.mapInArrow(kernel, out_schema)
+        .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)
         .withColumn("score", F.round(F.col("__raw"), 6))
-        .drop("__rn", "__raw", "__qvec", embedding_col)
+        .drop("__rn", "__raw")
         .withColumnRenamed("__qid", query_id_col)
     )
+
+
+def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only):
+    """The ``knn_batch`` Arrow kernel: ``groups`` lists (query positions,
+    (m, d) query matrix) pairs of one dimension each; ``qids`` are the
+    ids by position.  Per record batch and group it scores the rows of
+    that width against the group's queries, keeps pairs with a raw score
+    ``>= min_score`` (NaN — zero norm, NaN or NULL elements — never
+    passes), and of those, per query, the ones at or above the k-th
+    largest raw score.  Out go the batch's other columns, ``__qid`` and
+    ``__raw``."""
+
+    def kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from merkonvectordb_spark.functions.vector import fold_cosine, fold_dot
+
+        qid_arr = pa.array(qids, type=qid_arrow)
+        for rb in batches:
+            emb = rb.column(emb_col)
+            width = pc.list_value_length(emb).fill_null(-1).to_numpy()
+            rows, qpos, raw = [], [], []
+            for pos, qmat in groups:
+                d = qmat.shape[1]
+                sel = np.flatnonzero(width == d)
+                if sel.size == 0:
+                    continue
+                a = (
+                    emb.take(sel).flatten().to_numpy(zero_copy_only=False)
+                    .astype(np.float64).reshape(-1, 1, d)
+                )
+                score = (fold_dot if dot_only else fold_cosine)(a, qmat[None])
+                ok = score >= min_score
+                if sel.size > k:
+                    # k-th largest passing score per query (-inf when
+                    # fewer than k pass); ties with it stay
+                    kth = np.partition(
+                        np.where(ok, score, -np.inf), sel.size - k, axis=0
+                    )[sel.size - k]
+                    ok &= score >= kth
+                r, c = np.nonzero(ok)
+                rows.append(sel[r])
+                qpos.append(pos[c])
+                raw.append(score[r, c])
+            if sum(map(len, rows)) == 0:
+                continue
+            rows = np.concatenate(rows)
+            out = rb.drop_columns([emb_col]).take(rows)
+            yield pa.RecordBatch.from_arrays(
+                out.columns
+                + [qid_arr.take(np.concatenate(qpos)), pa.array(np.concatenate(raw))],
+                names=out.schema.names + ["__qid", "__raw"],
+            )
+
+    return kernel
 
 
 def mmr_rerank(

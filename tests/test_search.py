@@ -104,30 +104,176 @@ def test_knn_batch_per_query_topk(spark, corpus):
 
 
 def test_knn_batch_plans_bounded_window_limit(spark, corpus):
-    """The per-query top-k must push a map-side partial group-limit below
-    the exchange (WindowGroupLimit Partial) so the scored N·Q cross-product
-    is never shuffled — only ≤ k rows per query per input partition move.
-    Without this the window funnels each query's full corpus score set
-    through one reducer (the 100 TB scale-killer VERDICT r1 flagged)."""
+    """The corpus is scored by one Arrow kernel over its own scan — no
+    cross join of any physical form — and the per-query top-k pushes a
+    map-side partial group-limit below the exchange (WindowGroupLimit
+    Partial), so only ≤ k rows (plus ties) per query per input partition
+    move.  Without it the window funnels each query's full corpus score
+    set through one reducer (the 100 TB scale-killer VERDICT r1
+    flagged)."""
     qs = spark.createDataFrame(
         [("q0", [1.0, 0.0])],
         "query_id string, embedding array<float>",
     )
-    plan = (
-        knn_batch(corpus, qs, k=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    for prenorm in (False, True):  # cosine and pre-normalized dot path
+        plan = (
+            knn_batch(corpus, qs, k=2, assume_normalized=prenorm)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "WindowGroupLimit" in plan and "Partial" in plan
+        assert "MapInArrow" in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+        assert not any(
+            "BroadcastHashJoin" in line and "Cross" in line
+            for line in plan.splitlines()
+        )
+
+
+def _cross_join_knn_batch(vectors, queries, k, min_score, assume_normalized):
+    """The expression-form plan ``knn_batch`` replaced, kept as its
+    reference: broadcast the query set, cross-join it onto the corpus,
+    score each pair with the ``cosine_similarity``/``dot_product``
+    folds, then ``row_number() <= k`` per query."""
+    from pyspark.sql import Window
+
+    from merkonvectordb_spark.functions.vector import (
+        cosine_similarity,
+        dot_product,
+        l2_normalize,
     )
-    assert "WindowGroupLimit" in plan and "Partial" in plan
-    # same bounded shape on the pre-normalized dot path
-    plan_pn = (
-        knn_batch(corpus, qs, k=2, assume_normalized=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+
+    qproj = queries.select(
+        F.col("query_id").alias("__qid"), F.col("embedding").alias("__qvec")
     )
-    assert "WindowGroupLimit" in plan_pn and "Partial" in plan_pn
+    if assume_normalized:
+        qproj = qproj.withColumn("__qvec", l2_normalize(F.col("__qvec"))).where(
+            F.col("__qvec").isNotNull()
+        )
+    corpus = vectors.where(F.col("key").isNotNull() & (F.col("key") != ""))
+    score = (dot_product if assume_normalized else cosine_similarity)(
+        F.col("embedding"), F.col("__qvec")
+    )
+    raw = F.col("__raw")
+    w = Window.partitionBy("__qid").orderBy(F.desc("__raw"), F.asc("ingest_seq"))
+    return (
+        corpus.crossJoin(F.broadcast(qproj))
+        .where(F.size(F.col("embedding")) == F.size(F.col("__qvec")))
+        .withColumn("__raw", score)
+        .where(raw.isNotNull() & ~F.isnan(raw) & (raw >= F.lit(float(min_score))))
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .withColumn("score", F.round(raw, 6))
+        .drop("__rn", "__raw", "__qvec", "embedding")
+        .withColumnRenamed("__qid", "query_id")
+    )
+
+
+def test_knn_batch_matches_cross_join_reference(spark, monkeypatch):
+    """The Arrow kernel returns exactly the expression cross-join plan's
+    rows and scores on a hostile frame, in both scoring modes: zero-norm,
+    NaN-element, NULL-element, NULL and wrong-dim rows and queries; a
+    raw score exactly at the threshold; more tied rows than k spread
+    over partitions and two-row Arrow batches (so the per-batch
+    pre-limit must keep boundary ties); duplicate LONG query ids; k=0;
+    pass-through TIMESTAMP and NULL columns; query sets split into
+    several kernel chunks."""
+    from merkonvectordb_spark.functions.vector import l2_normalize
+    from merkonvectordb_spark.operators import search
+
+    nan = float("nan")
+    embs = [
+        [1.0, 0.0], [0.9, 0.1], [0.0, 1.0],  # [0,1] sits at 0.0 = min_score vs [1,0]
+        [0.0, 0.0],                          # zero norm
+        [nan, 1.0], [None, 1.0],             # NaN / NULL element
+        None,                                # NULL embedding
+        [1.0, 0.0, 0.0], [0.5, 0.5, 0.0],    # wrong dim for 2-d queries
+        [-0.3, 0.7], [0.6, 0.8], [0.123, -0.456],
+    ] + [[float(t), 0.0] for t in range(1, 9)]  # 8 exact ties with [1, 0]
+    # three partitions of rows 0-6 / 7-13 / 14-21: the empty and NULL keys
+    # come first and are purged, the ties fill the last partition's two-row
+    # Arrow batches, and ingest_seq falls with position, so each batch's
+    # tie-break winner is its SECOND row
+    rows = [("c0", "", [1.0, 0.0]), ("c0", None, [1.0, 0.0])] + [
+        ("c0", f"k{i}", e) for i, e in enumerate(embs)
+    ]
+    rows = [
+        r + (100 - i, i, None if i % 3 else f'{{"i": {i}}}')
+        for i, r in enumerate(rows)
+    ]
+    vectors = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3),
+        "collection STRING, key STRING, embedding ARRAY<FLOAT>, "
+        "ingest_seq LONG, sec LONG, metadata STRING",
+    ).select(
+        "collection", "key", "embedding", "ingest_seq",
+        F.timestamp_seconds("sec").alias("ts"), "metadata",
+    )
+    queries = spark.createDataFrame(
+        [
+            (1 << 40, [1.0, 0.0]), (1 << 40, [1.0, 0.0]),  # duplicate id
+            (7, [0.6, 0.8]), (8, [0.0, 0.0]), (9, [1.0, 1.0, 0.0]),
+            (10, None), (11, [nan, 1.0]), (12, [0.2, -0.9]),
+        ],
+        "query_id LONG, embedding ARRAY<FLOAT>",
+    )
+    unit = vectors.withColumn("embedding", l2_normalize(F.col("embedding")))
+
+    def rows_of(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    # (k, min_score, queries per kernel chunk)
+    cases = [(0, 0.0, 256), (1, 0.0, 256), (3, 0.0, 256), (30, 0.0, 256),
+             (30, 0.5, 256), (3, 0.0, 2)]
+    try:
+        for prenorm, corpus in ((False, vectors), (True, unit)):
+            for k, min_score, chunk in cases:
+                monkeypatch.setattr(search, "_QUERY_CHUNK", chunk)
+                got = knn_batch(corpus, queries, k=k, min_score=min_score,
+                                assume_normalized=prenorm)
+                want = _cross_join_knn_batch(corpus, queries, k, min_score, prenorm)
+                assert got.columns == want.columns
+                assert got.schema == want.schema
+                assert rows_of(got) == rows_of(want), (prenorm, k, min_score, chunk)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    at_min = [r for r in knn_batch(vectors, queries, k=30).collect()
+              if r.query_id == 1 << 40 and r.key == "k2"]
+    assert [r.score for r in at_min] == [0.0, 0.0]  # kept at raw == min_score
+
+
+def test_fold_helpers_match_expressions_bit_for_bit(spark):
+    """``fold_cosine``/``fold_dot`` — the knn_batch kernel's scoring —
+    return the very doubles the ``cosine_similarity``/``dot_product``
+    expressions do, at d=64 where a reordered (BLAS) sum differs."""
+    import numpy as np
+
+    from merkonvectordb_spark.functions.vector import (
+        cosine_similarity,
+        dot_product,
+        fold_cosine,
+        fold_dot,
+    )
+
+    rng = np.random.default_rng(3)
+    a = rng.normal(size=(200, 64)).astype("float32")
+    q = rng.normal(size=(3, 64)).astype("float32")
+    df = spark.createDataFrame(
+        [(i, j, a[i].tolist(), q[j].tolist()) for i in range(200) for j in range(3)],
+        "i INT, j INT, a ARRAY<FLOAT>, b ARRAY<FLOAT>",
+    ).select(
+        "i", "j",
+        cosine_similarity(F.col("a"), F.col("b")).alias("c"),
+        dot_product(F.col("a"), F.col("b")).alias("d"),
+    )
+    cos = fold_cosine(a[:, None, :], q[None])
+    dot = fold_dot(a[:, None, :], q[None])
+    for r in df.collect():
+        assert r.c == cos[r.i, r.j] and r.d == dot[r.i, r.j]
 
 
 def test_prenorm_dot_path_matches_cosine_path(spark, corpus):

@@ -94,7 +94,7 @@ def test_cosine_pandas_matches_expression(spark):
         if e[k] is None:
             assert p[k] is None  # unscorable rows: NULL in both paths
         else:
-            assert p[k] == pytest.approx(e[k], rel=1e-9)
+            assert p[k] == e[k]  # bit-identical: the same left-to-right fold
 
 
 def test_l2_normalize_unit_norm(spark):
