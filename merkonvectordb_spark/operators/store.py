@@ -21,10 +21,12 @@ Observable semantics replicated from the reference:
 * **InsertOrIgnore upserts** — the reference's double-write
   (MerkonMemoryStore.cs:243-260) is observably one upsert; we run one.
 
-Scale shape: every transform is a key-equi join between the (100 TB)
-state and a (small) change set — the change set is broadcast, the state
-never shuffles; the per-key ``row_number`` window only runs over
-collections touched by the change set when applied through VectorStore.
+Scale shape: the deletes and lookups are key-equi filters/joins between
+the (100 TB) state and a (small) change set, with the change set
+broadcast; upsert co-partitions the change set with the state in one
+exchange on (collection, key).  The per-key ``row_number`` windows only
+run over collections touched by the change set when applied through
+VectorStore.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ from pyspark.sql import functions as F
 STATE_COLS = ("collection", "key", "metadata", "embedding", "ts", "ingest_seq")
 
 _MERGE_KEYS = ["collection", "key"]
+_PAYLOAD = ("metadata", "embedding", "ts")
 
 
 def _first_match_rank(state: DataFrame) -> DataFrame:
@@ -93,40 +96,66 @@ def upsert(
     sequence numbers — (collection, key) ascending — so the choice is
     purely a physical one.
     """
-    if order_col is not None:
-        upd_ord = updates.withColumn("__uord", F.col(order_col))
-    else:
-        upd_ord = updates.withColumn(
-            "__uord", F.monotonically_increasing_id()
+    order = (
+        F.col(order_col)
+        if order_col is not None
+        else F.monotonically_increasing_id()
+    )
+    ord_type = updates.select(order).schema.fields[0].dataType
+    # State rows (__src 0) and batch rows (__src 1) share ONE frame: one
+    # exchange on the merge keys carries both, and one pass of per-key
+    # windows resolves the merge without a join.  The kept and fresh
+    # branches below read every column of that frame, so their plans
+    # share the exchange (AQE reuses it) and each input is read once.
+    both = state.select(
+        *STATE_COLS,
+        F.lit(0).alias("__src"),
+        F.lit(None).cast(ord_type).alias("__uord"),
+    ).unionByName(
+        updates.select(
+            *_MERGE_KEYS,
+            *_PAYLOAD,
+            F.lit(None).cast("long").alias("ingest_seq"),
+            F.lit(1).alias("__src"),
+            order.alias("__uord"),
         )
-    u_w = Window.partitionBy("collection", "key").orderBy(F.desc("__uord"))
-    upd = (
-        upd_ord.withColumn("__urn", F.row_number().over(u_w))
-        .where(F.col("__urn") == 1)
-        .drop("__uord", "__urn")
     )
-
-    ranked = _first_match_rank(state)
-    first = ranked.where(F.col("__rn") == 1)
-    rest = ranked.where(F.col("__rn") > 1).drop("__rn")
-
-    # in-place update: first-match rows joined to their new payload
-    updated = (
-        first.select("collection", "key", "ingest_seq")
-        .join(F.broadcast(upd), _MERGE_KEYS, "inner")
-        .select(*STATE_COLS)
+    per_key = Window.partitionBy(*_MERGE_KEYS)
+    # __rn 1: the first match (state rows first, in ingest order);
+    # __urn 1 on a batch row: the batch's last write to the key
+    first_w = per_key.orderBy(F.asc("__src"), F.asc("ingest_seq"))
+    last_w = per_key.orderBy(F.desc("__src"), F.desc("__uord"))
+    winner = (F.col("__src") == 1) & (F.col("__urn") == 1)
+    ranked = (
+        both.withColumn("__rn", F.row_number().over(first_w))
+        .withColumn("__urn", F.row_number().over(last_w))
+        .withColumn(
+            "__new",
+            F.first(F.when(winner, F.struct(*_PAYLOAD)), ignorenulls=True).over(per_key),
+        )
+        .withColumn("__has_state", F.min("__src").over(per_key) == 0)
     )
-    untouched_first = (
-        first.join(F.broadcast(upd), _MERGE_KEYS, "left_anti")
-        .drop("__rn")
-        .select(*STATE_COLS)
+    # NULL keys never match (SQL equality): a NULL-key batch row is
+    # always a fresh insert and NULL-key state rows are never updated
+    matchable = F.col("collection").isNotNull() & F.col("key").isNotNull()
+    take = (
+        (F.col("__src") == 0)
+        & (F.col("__rn") == 1)
+        & F.col("__new").isNotNull()
+        & matchable
     )
-    # appends: update keys with no existing row; fresh seq after global max
-    max_seq = F.broadcast(
-        state.agg(F.coalesce(F.max("ingest_seq"), F.lit(0)).alias("__max_seq"))
+    is_fresh = winner & (~F.col("__has_state") | ~matchable)
+    merged = ranked.where((F.col("__src") == 0) | is_fresh).select(
+        *_MERGE_KEYS,
+        *[F.when(take, F.col("__new")[c]).otherwise(F.col(c)).alias(c) for c in _PAYLOAD],
+        "ingest_seq",
+        "__src",
     )
-    fresh = upd.join(
-        state.select(*_MERGE_KEYS).distinct(), _MERGE_KEYS, "left_anti"
+    kept = merged.where(F.col("__src") == 0).select(*STATE_COLS)
+    fresh = merged.where(F.col("__src") == 1).drop("ingest_seq")
+    # fresh seqs start after the state's max: a read of ingest_seq alone
+    max_seq = state.agg(
+        F.coalesce(F.max("ingest_seq"), F.lit(0)).alias("__max_seq")
     )
     if bulk_inserts:
         from merkonvectordb_spark.operators.pipeline import (
@@ -143,16 +172,15 @@ def upsert(
     else:
         ins_w = Window.orderBy(F.asc("collection"), F.asc("key"))
         fresh = fresh.withColumn("__ord", F.row_number().over(ins_w))
+    # a one-row side: a cartesian product reads it in place, where a
+    # broadcast would cost a job of its own
     inserted = (
-        fresh.crossJoin(max_seq)
+        fresh.hint("shuffle_replicate_nl")
+        .crossJoin(max_seq)
         .withColumn("ingest_seq", F.col("__max_seq") + F.col("__ord"))
         .select(*STATE_COLS)
     )
-    return (
-        untouched_first.unionByName(updated)
-        .unionByName(rest.select(*STATE_COLS))
-        .unionByName(inserted)
-    )
+    return kept.unionByName(inserted)
 
 
 def delete_keys(

@@ -14,7 +14,7 @@ import os
 from collections.abc import Callable
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -126,6 +126,14 @@ def free_persisted_blocks(spark: SparkSession) -> int:
     for jrdd in rdds:
         jrdd.unpersist(False)
     return len(rdds)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks behind a frame made by ``localCheckpoint``,
+    for the operator that made it and knows no lazy frame still reads
+    it.  ``DataFrame.unpersist`` does not reach them (it clears cached
+    plans only); the checkpointed RDD is the frame's logical plan."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def with_caller_context(spark: SparkSession, fn: Callable) -> Callable:

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from merkonvectordb_spark.operators import store as ops
 from merkonvectordb_spark.schema import VECTORS_SCHEMA_DDL
+from merkonvectordb_spark.session import release_checkpoint
 
 _REGISTRY_DDL = "collection STRING, created_seq LONG"
 
@@ -124,38 +125,52 @@ class VectorStore:
         # Checkpointing cuts the lineage BEFORE the overwrite, and the
         # `present` set is taken from the checkpointed frame up front.
         new_rows = new_rows.localCheckpoint(eager=True)
-        present = {
-            r["collection"]
-            for r in new_rows.select("collection").distinct().collect()
-        }
+        present = set()
+        if touched:
+            present = {
+                r["collection"]
+                for r in new_rows.select("collection").distinct().collect()
+            }
         (
             new_rows.repartitionByRange(par, "collection", "key")
             .write.mode("overwrite")
             .partitionBy("collection")
             .parquet(self.vectors_path)
         )
-        if touched:
-            for c in touched:
-                if c not in present:
-                    # partition drop assumes a DRIVER-VISIBLE filesystem
-                    # (local FS / fuse-mounted object store).  On a bare
-                    # object store this becomes a storage-API delete; the
-                    # store path abstraction is the single seam to swap.
-                    shutil.rmtree(
-                        os.path.join(self.vectors_path, f"collection={c}"),
-                        ignore_errors=True,
-                    )
+        # written: nothing reads the checkpoint any more
+        release_checkpoint(new_rows)
+        for c in touched or ():
+            if c not in present:
+                # partition drop assumes a DRIVER-VISIBLE filesystem
+                # (local FS / fuse-mounted object store).  On a bare
+                # object store this becomes a storage-API delete; the
+                # store path abstraction is the single seam to swap.
+                shutil.rmtree(
+                    os.path.join(self.vectors_path, f"collection={c}"),
+                    ignore_errors=True,
+                )
 
-    def _write_registry(self, reg: DataFrame) -> None:
-        # registry is tiny (one row per collection): single file, full
-        # rewrite via a tmp dir (can't overwrite a path while reading it)
-        import shutil
+    def _write_registry(self, rows: Sequence[tuple]) -> None:
+        # registry is tiny (one row per collection): the caller collects
+        # it, edits it on the driver and hands the rows back, so the new
+        # table is a local frame and overwrites its own path directly
+        reg = self.spark.createDataFrame(list(rows), _REGISTRY_DDL)
+        reg.coalesce(1).write.mode("overwrite").parquet(self.registry_path)
 
-        tmp_path = self.registry_path + ".tmp"
-        reg.coalesce(1).write.mode("overwrite").parquet(tmp_path)
-        tmp = self.spark.read.schema(_REGISTRY_DDL).parquet(tmp_path)
-        tmp.coalesce(1).write.mode("overwrite").parquet(self.registry_path)
-        shutil.rmtree(tmp_path, ignore_errors=True)
+    def _register(self, names: Sequence[str]) -> None:
+        """Add the collections of ``names`` the registry lacks, with
+        consecutive ``created_seq`` in name order: one collect, and one
+        write only when something is missing.  An existing entry keeps
+        its ``created_seq``."""
+        rows = [tuple(r) for r in self.registry().collect()]
+        known = {c for c, _ in rows}
+        missing = sorted(set(names) - known)
+        if not missing:
+            return
+        top = max((seq for _, seq in rows), default=0)
+        self._write_registry(
+            rows + [(c, top + i) for i, c in enumerate(missing, 1)]
+        )
 
     # -- W9/W10/W11 collection DDL ----------------------------------------
     def create_table(self) -> None:
@@ -170,14 +185,7 @@ class VectorStore:
         reference auto-creates collections on READ too
         (MerkonDatabase.cs:28,40) — a side effect we deliberately do not
         replicate (SURVEY §7.4); creation is explicit or via upsert."""
-        reg = self.registry()
-        if reg.where(F.col("collection") == name).limit(1).count():
-            return  # idempotent: never rewrite an existing created_seq
-        nxt = reg.agg(
-            F.coalesce(F.max("created_seq"), F.lit(0)).alias("m")
-        ).first()["m"] + 1
-        new = self.spark.createDataFrame([(name, nxt)], _REGISTRY_DDL)
-        self._write_registry(new.unionByName(reg))
+        self._register([name])
 
     def collection_exists(self, name: str) -> bool:
         """W11 (MerkonDatabase.cs:44-47): registry membership (covers empty
@@ -202,7 +210,19 @@ class VectorStore:
     def upsert(self, records: DataFrame, key_from_metadata: bool = True) -> None:
         """W1-W4 batched upsert.  ``key ← metadata.id`` first (W3,
         MerkonMemoryStore.cs:240) unless disabled.  Only partitions of
-        collections present in ``records`` are read+rewritten."""
+        collections present in ``records`` are read and rewritten.
+
+        Per call: the prepared batch is read once into a local
+        checkpoint, released when the call ends.  Then one job collects
+        its collections, one job takes both ``ingest_seq`` maxima, one
+        checkpoint evaluates the merge (``operators.store.upsert``, one
+        pass over the affected partitions), one write replaces them, and
+        the registry is collected once and written only when a
+        collection is new.
+
+        A NULL ``collection`` raises ``ValueError`` before anything is
+        written: no partition can hold it and the registry cannot name
+        it."""
         upd = ops.with_key_from_metadata(records) if key_from_metadata else records
         if self.pre_normalized:
             from merkonvectordb_spark.functions.vector import l2_normalize
@@ -213,34 +233,36 @@ class VectorStore:
                 "embedding",
                 l2_normalize(F.col("embedding")).cast("array<float>"),
             )
-        colls = [r["collection"] for r in upd.select("collection").distinct().collect()]
-        state = self.vectors()
-        affected = state.where(F.col("collection").isin(colls))
-        # global max over ALL collections: a cheap metadata-ish aggregate
-        new_affected = ops.upsert(affected, upd)
-        # seq correctness across collections: ops.upsert used affected-max;
-        # shift inserted seqs past the GLOBAL max so sequences stay unique
-        g_max = state.agg(F.coalesce(F.max("ingest_seq"), F.lit(0))).first()[0]
-        a_max = affected.agg(F.coalesce(F.max("ingest_seq"), F.lit(0))).first()[0]
-        if g_max > a_max:
-            shift = g_max - a_max
-            new_affected = new_affected.withColumn(
-                "ingest_seq",
-                F.when(
-                    F.col("ingest_seq") > a_max,
-                    F.col("ingest_seq") + F.lit(shift),
-                ).otherwise(F.col("ingest_seq")),
-            )
-        self._overwrite_partitions(new_affected)
-        reg = self.registry()
-        missing = [
-            r["collection"]
-            for r in self.spark.createDataFrame([(c,) for c in colls], "collection STRING")
-            .join(reg.select("collection"), "collection", "left_anti")
-            .collect()
-        ]
-        for c in missing:
-            self.create_collection(c)
+        upd = upd.localCheckpoint(eager=True)
+        try:
+            colls = [
+                r["collection"]
+                for r in upd.select("collection").distinct().collect()
+            ]
+            if None in colls:
+                raise ValueError("upsert batch has rows with a NULL collection")
+            colls.sort()
+            state = self.vectors()
+            in_batch = F.col("collection").isin(colls)
+            g_max, a_max = state.agg(
+                F.coalesce(F.max("ingest_seq"), F.lit(0)),
+                F.coalesce(F.max(F.when(in_batch, F.col("ingest_seq"))), F.lit(0)),
+            ).first()
+            new_affected = ops.upsert(state.where(in_batch), upd)
+            # ops.upsert numbers inserts after the AFFECTED max; shift them
+            # past the GLOBAL max so sequences stay unique across collections
+            if g_max > a_max:
+                new_affected = new_affected.withColumn(
+                    "ingest_seq",
+                    F.when(
+                        F.col("ingest_seq") > a_max,
+                        F.col("ingest_seq") + F.lit(g_max - a_max),
+                    ).otherwise(F.col("ingest_seq")),
+                )
+            self._overwrite_partitions(new_affected)
+        finally:
+            release_checkpoint(upd)
+        self._register(colls)
 
     # -- W5-W8 deletes -----------------------------------------------------
     def delete(self, collection: str, key: str) -> None:
@@ -262,8 +284,9 @@ class VectorStore:
         p = os.path.join(self.vectors_path, f"collection={name}")
         if os.path.exists(p):
             shutil.rmtree(p)
-        reg = self.registry().where(F.col("collection") != name)
-        self._write_registry(reg)
+        self._write_registry(
+            [tuple(r) for r in self.registry().collect() if r["collection"] != name]
+        )
 
     def delete_empty(self, collection: str) -> None:
         """W8 explicit empty-key purge (never a read side effect)."""
@@ -349,24 +372,19 @@ class VectorStore:
         expired = F.col("ts").isNotNull() & (
             F.col("ts") < F.lit(older_than).cast("timestamp")
         )
-        hit = [
-            r["collection"]
-            for r in state.where(expired)
-            .select("collection")
-            .distinct()
-            .collect()
-        ]
+        # expired rows per collection: names the partitions to rewrite and
+        # counts what the rewrite removes, in one job before the overwrite
+        # (NULL-collection rows sit in no named partition and are left)
+        hit = {
+            r["collection"]: r["count"]
+            for r in state.where(expired).groupBy("collection").count().collect()
+            if r["collection"] is not None
+        }
         if not hit:
             return 0
-        touched = state.where(F.col("collection").isin(hit))
-        n_before = touched.count()
-        kept = touched.where(~expired)
-        # count BEFORE the overwrite: afterwards the lazy lineage would
-        # re-read the rewritten files (numerically same, semantically
-        # wrong source)
-        n_kept = kept.count()
-        self._overwrite_partitions(kept, touched=hit)
-        return n_before - n_kept
+        kept = state.where(F.col("collection").isin(list(hit)) & ~expired)
+        self._overwrite_partitions(kept, touched=list(hit))
+        return sum(hit.values())
 
     # -- P1 / R1 / S3 reads ------------------------------------------------
     def get(self, collection: str, key: str, with_embedding: bool = True):

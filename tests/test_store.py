@@ -113,6 +113,31 @@ def test_upsert_batch_last_write_wins(spark, base):
     assert len(rows) == 1 and '"v":2' in rows[0].metadata
 
 
+def test_upsert_null_keys_never_match(spark):
+    """SQL equality: a NULL key (or collection) in the batch matches no
+    state row, so it inserts fresh, and NULL-key state rows stay as they
+    were; duplicate NULL-key batch rows still collapse to the last."""
+    st = _state(
+        spark,
+        [("c0", None, "s1", [1.0], TS, 1), (None, "k", "s2", [1.0], TS, 2)],
+    )
+    upd = spark.createDataFrame(
+        [
+            ("c0", None, "u0", [2.0], TS, 0),
+            ("c0", None, "u1", [2.0], TS, 1),
+            (None, "k", "u2", [2.0], TS, 2),
+        ],
+        "collection STRING, key STRING, metadata STRING, "
+        "embedding ARRAY<FLOAT>, ts TIMESTAMP, o INT",
+    )
+    out = ops.upsert(st, upd, order_col="o")
+    got = sorted(
+        (r.metadata, r.ingest_seq) for r in out.collect()
+    )
+    # fresh seqs in (collection, key) order, NULLs first
+    assert got == [("s1", 1), ("s2", 2), ("u1", 4), ("u2", 3)]
+
+
 def test_key_from_metadata(spark):
     rec = _upd(spark, [("c0", "WRONG", '{"id":"right"}', [1.0], TS)])
     out = ops.with_key_from_metadata(rec)
@@ -363,3 +388,67 @@ def test_vacuum_purges_fully_expired_collection(spark, tmp_path):
     removed = store.vacuum(old_ts + timedelta(days=1))
     assert removed == 1
     assert store.vectors().where(F.col("collection") == "stale").count() == 0
+
+
+def test_upsert_null_collection_raises_before_writing(spark, tmp_path):
+    """A NULL collection fits no partition: dynamic overwrite would
+    replace the default partition (destroying its rows) and the registry
+    would gain a NULL entry per call.  The batch is refused whole."""
+    store = VectorStore(spark, str(tmp_path))
+    store.upsert(_upd(spark, [("c1", "x", "{}", [1.0], TS)]), key_from_metadata=False)
+    bad = _upd(
+        spark, [(None, "a", "{}", [1.0], TS), ("c1", "y", "{}", [1.0], TS)]
+    )
+    with pytest.raises(ValueError, match="NULL collection"):
+        store.upsert(bad, key_from_metadata=False)
+    assert [(r.collection, r.key) for r in store.vectors().collect()] == [("c1", "x")]
+    assert [tuple(r) for r in store.registry().collect()] == [("c1", 1)]
+
+
+def test_upsert_registers_new_collections_in_one_write(spark, tmp_path, monkeypatch):
+    store = VectorStore(spark, str(tmp_path))
+    writes = []
+    real = store._write_registry
+    monkeypatch.setattr(
+        store, "_write_registry", lambda rows: (writes.append(rows), real(rows))
+    )
+    store.create_collection("c_old")
+    recs = _upd(
+        spark,
+        [(c, "k", "{}", [1.0], TS) for c in ("zeta", "alpha", "mid", "c_old")],
+    )
+    store.upsert(recs, key_from_metadata=False)
+    assert len(writes) == 2  # create_collection, then one for the three new
+    assert sorted(tuple(r) for r in store.registry().collect()) == [
+        ("alpha", 2), ("c_old", 1), ("mid", 3), ("zeta", 4),
+    ]
+    # existing collections only: the registry is read, never rewritten
+    store.upsert(_upd(spark, [("mid", "k2", "{}", [1.0], TS)]), key_from_metadata=False)
+    assert len(writes) == 2
+
+
+def test_upsert_job_budget_and_releases_its_blocks(spark, tmp_path):
+    """One upsert into an existing collection: the batch is read once and
+    the store's metadata once, so the whole call fits in 14 Spark jobs,
+    and neither the batch's nor the merge's checkpoint outlives it."""
+    sc = spark.sparkContext
+    store = VectorStore(spark, str(tmp_path))
+    rows = [("c0", f"k{i}", "{}", [float(i), 1.0], TS) for i in range(40)]
+    store.upsert(_upd(spark, rows), key_from_metadata=False)
+    batch = _upd(
+        spark, [("c0", f"k{i}", '{"v":2}', [2.0, 2.0], TS) for i in range(30, 50)]
+    )
+    before = {r.key: r.ingest_seq for r in store.scan("c0").collect()}
+    n_rdds = len(sc._jsc.getPersistentRDDs())
+    sc.setJobGroup("test_upsert_job_budget", "one upsert")
+    try:
+        store.upsert(batch, key_from_metadata=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_upsert_job_budget")
+    assert len(jobs) <= 14, f"{len(jobs)} jobs"
+    assert len(sc._jsc.getPersistentRDDs()) <= n_rdds
+    got = {r.key: (r.metadata, r.ingest_seq) for r in store.scan("c0").collect()}
+    assert len(got) == 50
+    assert got["k30"] == ('{"v":2}', before["k30"])  # updated in place
+    assert sorted(got[f"k{i}"][1] for i in range(40, 50)) == list(range(41, 51))
