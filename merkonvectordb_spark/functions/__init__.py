@@ -1,14 +1,13 @@
 """Scalar/vector/text function library (SURVEY.md §2.6).
 
 Everything here is a Column-in/Column-out builder over built-in
-``pyspark.sql.functions`` (JVM-side, whole-stage-codegen'd) unless
-explicitly named ``*_pandas`` — those are Arrow-batched pandas_udfs for
-the paths where built-ins genuinely lose (wide fixed-dim float math).
+``pyspark.sql.functions`` (JVM-side).  The numpy forms of the vector
+folds (``vector.fold_dot``/``fold_cosine``) serve the Arrow kernels in
+``operators``.
 """
 
 from merkonvectordb_spark.functions.vector import (
     cosine_similarity,
-    cosine_similarity_pandas,
     dot_product,
     l2_norm,
     l2_normalize,
@@ -27,7 +26,6 @@ from merkonvectordb_spark.functions.text import (
 
 __all__ = [
     "cosine_similarity",
-    "cosine_similarity_pandas",
     "dot_product",
     "l2_norm",
     "l2_normalize",

@@ -15,7 +15,8 @@ Design notes for 100 TB scale:
   to any other engine that folds left-to-right in double (the DuckDB
   oracle's ``list_dot_product`` over ``DOUBLE[]`` matches).
 * ``fold_dot``/``fold_cosine`` are the numpy form of the same folds for
-  Arrow batch kernels (``cosine_similarity_pandas``, ``knn_batch``): one
+  the Arrow batch kernels (``search.knn_batch``, the IVF/LSH scoring in
+  ``operators.ann``): one
   vectorized multiply-add per coordinate, left to right in float64, so
   every pair sees the expression's exact IEEE operation sequence and the
   scores are bit-identical to it.  Never ``@``/``np.dot``/``einsum``:
@@ -29,20 +30,33 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def vector_literal(values: Sequence[float]) -> Column:
     """A literal ARRAY<DOUBLE> column from a Python sequence (query vector).
 
-    Uses a single array literal (one expression node) rather than one
-    ``lit()`` per dimension — at d=1536 a per-element construction bloats
-    the expression tree and the codegen'd method size.
+    One expression node: the vector travels as a JSON string that the
+    optimizer constant-folds into a single array ``Literal``.  PySpark's
+    ``F.lit(list)`` builds ``array(lit, lit, ...)`` instead — one node per
+    dimension, 1,536 at ada-002 width, analysed and optimized once per
+    reference (``cosine_similarity`` references the query three times).
+    ``repr`` round-trips every double exactly; NaN and ±inf use the JSON
+    reader's non-numeric tokens.
     """
-    return F.lit([float(v) for v in values])
+
+    def tok(v: float) -> str:
+        if v != v:
+            return "NaN"
+        if v in (math.inf, -math.inf):
+            return "Infinity" if v > 0 else "-Infinity"
+        return repr(v)
+
+    text = "[" + ",".join(tok(float(v)) for v in values) + "]"
+    return F.from_json(F.lit(text), "array<double>")
 
 
 def dot_product(a: Column, b: Column) -> Column:
@@ -83,11 +97,9 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     The reference's ``TensorPrimitives.CosineSimilarity`` yields NaN on
     zero-norm input, which then fails the inclusive ``>=`` threshold
     (MerkonMemoryStore.cs:137-138) — the row is excluded.  We represent
-    "unscorable" as NULL in BOTH scoring paths (expression and pandas):
-    NULL fails ``>=`` identically, so observable behavior matches the
-    reference, and the two paths can't diverge (Arrow converts float NaN
-    to NULL on the pandas→JVM hop, so NULL is the only representation the
-    pandas path can produce anyway).
+    "unscorable" as NULL; the numpy form ``fold_cosine`` gives NaN, which
+    the Arrow kernels drop before the threshold.  Either fails ``>=``, so
+    observable behavior matches the reference.
     """
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0.0, dot_product(a, b) / denom)
@@ -122,28 +134,3 @@ def fold_cosine(a, b):
     denom = np.sqrt(fold_dot(a, a)) * np.sqrt(fold_dot(b, b))
     with np.errstate(divide="ignore", invalid="ignore"):
         return np.where(denom > 0.0, fold_dot(a, b) / denom, np.nan)
-
-
-def cosine_similarity_pandas(query: Sequence[float]):
-    """Arrow-batched numpy cosine vs a fixed query vector.
-
-    Returns a pandas_udf Column-builder: ``df.withColumn("score",
-    cosine_similarity_pandas(q)(F.col("embedding")))``.  The query vector is
-    captured in the closure (small — pickled once per task, not per row).
-    ~10-100× over row-at-a-time Python.
-
-    Scores are ``fold_cosine``'s, bit-identical to ``cosine_similarity``;
-    zero-norm rows (either side) produce NULL, the same as the expression
-    (np.nan becomes NULL across the Arrow boundary).
-    """
-    import numpy as np
-
-    q = np.asarray(list(query), dtype=np.float64)
-
-    @F.pandas_udf(T.DoubleType())
-    def _cos(col: pd.Series) -> pd.Series:
-        # stack the Arrow list column into a (batch, dim) matrix
-        out = fold_cosine(np.vstack(col.to_numpy()), q)
-        return pd.Series(out)  # NaN → NULL across Arrow: the contract
-
-    return _cos

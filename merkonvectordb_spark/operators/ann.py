@@ -30,14 +30,22 @@ from __future__ import annotations
 import random
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from merkonvectordb_spark.functions.vector import (
     cosine_similarity,
     dot_product,
+    fold_cosine,
+    l2_normalize,
+)
+from merkonvectordb_spark.operators.search import (
+    collect_queries,
+    kernel_topk,
 )
 
 DIM = 64  # fixture embedding dimensionality
@@ -85,8 +93,6 @@ def bucket_array_pandas(planes: list[list[list[float]]]):
     corpus).  The oracle is the fold-exact reference and pins it for
     the fixtures.
     """
-    import numpy as np
-
     P = np.asarray(planes, dtype=np.float64)  # (tables, bits, dim)
     n_tables, n_bits, _ = P.shape
     M = P.reshape(n_tables * n_bits, -1)
@@ -188,7 +194,7 @@ def knn_batch_ann(
 
     Plan: index join on (table_id, bucket) → distinct (query, candidate)
     → candidate join back to corpus embeddings (hash join on id) →
-    broadcast query vectors → WindowGroupLimit top-k.  The corpus is
+    ``rerank_topk`` Arrow kernel → WindowGroupLimit top-k.  The corpus is
     touched only at its candidate rows — the full-scan cross product of
     ``knn_batch`` never materializes.
     """
@@ -318,13 +324,93 @@ def embedding_near_pairs(
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the list-probing alternative to hyperplane LSH.
 # Coarse quantizer: a FIXED-size deterministic centroid set (k-means would
-# refine it; the assignment/probe machinery is identical).  Assignment is
-# corpus × K (K fixed, linear in corpus, broadcast + map-side combine —
-# no window shuffle); queries probe their n_probe nearest lists.
+# refine it; the assignment/probe machinery is identical).  Centroids and
+# queries are collected to the driver; Arrow kernels score rows against
+# them with the bit-exact numpy folds: row-wise assignment (no shuffle),
+# driver-side probing, a re-rank that reads only the probed lists.
 # ---------------------------------------------------------------------------
 
 IVF_K = 16
 IVF_N_PROBE = 4
+
+
+def _centroids(centroids: DataFrame):
+    """The centroid set on the driver: ``(cid type, [(cids, (K_d, d)
+    matrix)])`` with one group per dimension, cids ascending within each
+    (so column order breaks score ties to the lowest cid).  NULL and
+    empty vectors drop — they never score."""
+    by_dim: dict = {}
+    rows = centroids.select("cid", "cv").collect()
+    for cid, cv in sorted(
+        (r for r in rows if r[0] is not None and r[1]), key=lambda r: r[0]
+    ):
+        by_dim.setdefault(len(cv), []).append((cid, cv))
+    groups = [
+        (np.array([c for c, _ in g]), np.array([v for _, v in g], dtype=np.float64))
+        for g in by_dim.values()
+    ]
+    return centroids.schema["cid"].dataType, groups
+
+
+def _best(score, n: int):
+    """Each row's ``n`` best columns of ``score``, best first: (column
+    indices, scores), ties to the lower column, NaN last (and NaN out)."""
+    o = np.argsort(-score, axis=1, kind="stable")[:, :n]
+    return o, np.take_along_axis(score, o, 1)
+
+
+def _assign(df, cents, id_col, emb_col, n_best, carry=()) -> DataFrame:
+    """``(id, cid, __cos, *carry)``: every row of ``df`` with each of its
+    ``n_best`` highest-cosine centroids of its own width (``cents`` from
+    ``_centroids``), ties to the lowest cid, in one row-wise
+    ``mapInArrow`` pass.  Rows that score NaN against every centroid —
+    NULL, empty, zero-norm, NaN-element or unmatched-width vectors —
+    drop.  Score matrices hold at most 2^20 entries."""
+    cid_type, groups = cents
+    out_carry = [c for c in carry if c != id_col]
+    src = df.select(*dict.fromkeys([id_col, emb_col, *out_carry]))
+    schema = T.StructType(
+        [src.schema[id_col], T.StructField("cid", cid_type),
+         T.StructField("__cos", T.DoubleType())]
+        + [src.schema[c] for c in out_carry]
+    )
+    cid_arrow = to_arrow_type(cid_type)
+
+    def kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for rb in batches:
+            emb = rb.column(emb_col)
+            width = pc.list_value_length(emb).fill_null(-1).to_numpy()
+            rows, cid, cos = [], [], []
+            for cids, cmat in groups:
+                d = cmat.shape[1]
+                sel = np.flatnonzero(width == d)
+                step = max(1, (1 << 20) // len(cids))
+                for lo in range(0, sel.size, step):
+                    s = sel[lo : lo + step]
+                    a = (
+                        emb.take(s).flatten().to_numpy(zero_copy_only=False)
+                        .astype(np.float64).reshape(-1, 1, d)
+                    )
+                    o, sc = _best(fold_cosine(a, cmat[None]), n_best)
+                    r, j = np.nonzero(~np.isnan(sc))
+                    rows.append(s[r])
+                    cid.append(cids[o[r, j]])
+                    cos.append(sc[r, j])
+            if sum(map(len, rows)) == 0:
+                continue
+            rows = np.concatenate(rows)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col).take(rows),
+                 pa.array(np.concatenate(cid)).cast(cid_arrow),
+                 pa.array(np.concatenate(cos))]
+                + [rb.column(c).take(rows) for c in out_carry],
+                names=schema.names,
+            )
+
+    return src.mapInArrow(kernel, schema)
 
 
 def ivf_assign(
@@ -338,18 +424,15 @@ def ivf_assign(
     """Assign every row to its ``n_best`` highest-cosine centroids
     (ties → lowest centroid id).  ``centroids`` carries (cid, cv).
 
-    n_best=1 (corpus assignment) uses a partial-aggregable max-of-struct
-    — the corpus×K scored rows combine map-side, nothing shuffles but
-    one struct per row.  n_best>1 (query probing) ranks via a window
-    over the (tiny) query set.
+    The K centroids are collected to the driver (index metadata, like
+    ``knn_batch``'s query set) and every row is scored in one row-wise
+    ``mapInArrow`` kernel (``_assign``): no cross join, no aggregate, no
+    exchange.  Assignment is per ROW, so two rows sharing an id each
+    land in their own best lists with their own payload.
 
-    ``carry`` (n_best=1 only) threads extra payload columns of ``df``
-    through the aggregate via ``first()`` — deterministic because every
-    pre-agg row of an id holds the identical payload (the kmeans_refine
-    pattern).  Callers that persist the assignment WITH its payload
-    (operators.index) thereby skip the assignment⋈source re-join and
-    its second source scan (guide §2.4): shuffle volume is unchanged —
-    the payload crossed the join's source-side exchange before."""
+    ``carry`` (n_best=1 only) passes extra payload columns of ``df``
+    through the kernel, so callers that persist the assignment WITH its
+    payload (operators.index) never re-join it to the source."""
     if carry and n_best != 1:
         raise ValueError("carry is only supported with n_best=1")
     clash = sorted({"cid", "cv", "__cos", "__b"} & set(carry))
@@ -357,35 +440,79 @@ def ivf_assign(
         raise ValueError(
             f"carry names {clash} collide with ivf_assign's own columns"
         )
-    out_carry = [c for c in carry if c != id_col]
-    extra = [c for c in out_carry if c != emb_col]
-    scored = (
-        df.select(F.col(id_col), F.col(emb_col), *[F.col(c) for c in extra])
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("__cos", cosine_similarity(F.col(emb_col), F.col("cv")))
-        .where(F.col("__cos").isNotNull() & (~F.isnan("__cos")))
+    return _assign(
+        df, _centroids(centroids), id_col, emb_col, n_best, carry
+    ).drop("__cos")
+
+
+def _probe(qids, groups, cents, n_probe):
+    """Driver-side probing: each query id's ``n_probe`` best centroids
+    over ALL its vectors (a repeated id pools them), score descending
+    then cid ascending.  ``qids`` and
+    ``groups`` come from ``search.collect_queries``.  Returns ``(keys,
+    member, pairs)``: the probed cids, ``member[i, p]`` — query position
+    ``p`` probes ``keys[i]`` — and the ``(qid, cid)`` probe pairs."""
+    _, cgroups = cents
+    cids = np.concatenate([c for c, _ in cgroups] or [np.zeros(0, int)])
+    score = np.full((len(qids), cids.size), np.nan)
+    off = 0
+    for cs, cmat in cgroups:
+        for pos, qmat in groups:
+            if qmat.shape[1] == cmat.shape[1]:
+                score[np.ix_(pos, range(off, off + len(cs)))] = fold_cosine(
+                    qmat[:, None], cmat[None]
+                )
+        off += len(cs)
+    order = np.argsort(cids, kind="stable")
+    score, cids = score[:, order], cids[order]
+    by_qid: dict = {}
+    for p, q in enumerate(qids):
+        by_qid.setdefault(q, []).append(p)
+    pairs = []
+    for q, ps in by_qid.items():  # the id's vectors pooled, cid-major
+        o, sc = _best(score[ps].T.reshape(1, -1), n_probe)
+        pairs += [(q, int(c)) for c in cids[o[~np.isnan(sc)] // len(ps)]]
+    keys = sorted({c for _, c in pairs})
+    row = {c: i for i, c in enumerate(keys)}
+    member = np.zeros((len(keys), len(qids)), dtype=bool)
+    for q, c in pairs:
+        member[row[c], by_qid[q]] = True
+    return keys, member, pairs
+
+
+def _routed_topk(frame, queries, key_col, route, k, min_score, id_col,
+                 emb_col, query_id_col) -> DataFrame:
+    """Per-query top-k of ``frame`` in the ``search.kernel_topk`` Arrow
+    kernel, each row scored only against the queries its ``key_col``
+    admits: ``route(qids, groups)`` gives ``(keys, member)`` (see
+    ``search._topk_kernel``).  Rows keyed outside ``keys`` are filtered
+    by a literal ``isin`` first — partition pruning on a persisted
+    index.  NULL query ids drop; ties break by ``id_col``.  Out go
+    ``query_id_col``, ``frame``'s other columns and ``score``."""
+    queries = queries.where(F.col(query_id_col).isNotNull())
+    qids, groups = collect_queries(queries, query_id_col, emb_col, k)
+    keys, member = route(qids, groups)
+    out = kernel_topk(
+        frame.where(F.col(key_col).isin(keys)), qids, groups,
+        queries.schema[query_id_col].dataType, k, min_score, emb_col,
+        query_id_col, [F.desc("__raw"), F.asc(id_col)],
+        route=(key_col, keys, member),
     )
-    if n_best == 1:
-        best = (
-            scored.groupBy(id_col)
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("__cos").alias("c"),
-                        (-F.col("cid")).alias("nc"),
-                        F.col("cid").alias("cid"),
-                    )
-                ).alias("__b"),
-                *[F.first(F.col(c)).alias(c) for c in out_carry],
-            )
-            .select(F.col(id_col), F.col("__b.cid").alias("cid"), *out_carry)
-        )
-        return best
-    w = Window.partitionBy(id_col).orderBy(F.desc("__cos"), F.asc("cid"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n_best)
-        .select(F.col(id_col), "cid")
+    rest = [c for c in frame.columns if c not in (key_col, emb_col)]
+    return out.select(query_id_col, *rest, "score")
+
+
+def _ivf_topk(lists, queries, cents, k, n_probe, min_score, id_col,
+              emb_col, query_id_col) -> DataFrame:
+    """THE probe + exact re-rank tail of ``knn_batch_ivf`` and
+    ``operators.index.search_ivf_index`` (one definition makes their
+    bit-identical promise true by construction): ``lists`` carries
+    ``(id, cid, emb, extra...)``; only the probed lists are read, each
+    row scored against exactly the queries probing its list."""
+    return _routed_topk(
+        lists, queries, "cid",
+        lambda qids, groups: _probe(qids, groups, cents, n_probe)[:2],
+        k, min_score, id_col, emb_col, query_id_col,
     )
 
 
@@ -398,36 +525,23 @@ def rerank_topk(
     emb_col: str,
     query_id_col: str,
 ) -> DataFrame:
-    """THE exact re-rank tail shared by the in-memory and persisted IVF
-    search paths (``knn_batch_ivf`` / ``operators.index.search_ivf_index``
-    promise bit-identical semantics — one definition makes that true by
-    construction): broadcast query vectors, exact cosine, NaN-safe
-    inclusive threshold, bounded per-query top-k, 6dp output rounding.
+    """The exact re-rank tail of the LSH searches: each candidate is
+    scored against its own query — every vector of its ``__qid`` —
+    gathered from the driver-held query set (``_routed_topk``).
 
     ``cand`` carries ``__qid`` plus the candidate rows WITH their
     ``emb_col`` (and any extra columns, which pass through).
     """
-    qvecs = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(emb_col).alias("__qvec")
-        )
-    )
-    scored = (
-        cand.join(qvecs, "__qid")
-        .withColumn("__raw", cosine_similarity(F.col(emb_col), F.col("__qvec")))
-        .where(
-            F.col("__raw").isNotNull()
-            & (~F.isnan("__raw"))
-            & (F.col("__raw") >= F.lit(float(min_score)))
-        )
-    )
-    w = Window.partitionBy("__qid").orderBy(F.desc("__raw"), F.asc(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .withColumn("score", F.round(F.col("__raw"), 6))
-        .drop("__rn", "__raw", "__qvec", emb_col)
-        .withColumnRenamed("__qid", query_id_col)
+
+    def own_query(qids, _):
+        slot = {q: i for i, q in enumerate(dict.fromkeys(qids))}
+        member = np.zeros((len(slot), len(qids)), dtype=bool)
+        member[[slot[q] for q in qids], np.arange(len(qids))] = True
+        return list(slot), member
+
+    return _routed_topk(
+        cand, queries, "__qid", own_query, k, min_score, id_col, emb_col,
+        query_id_col,
     )
 
 
@@ -446,24 +560,19 @@ def knn_batch_ivf(
     """Batch ANN top-k via IVF: corpus rows live in their best-centroid
     list; each query probes its n_probe nearest lists; candidates
     exact-cosine re-rank.  Scan cost per query ≈ n_probe/K of the
-    corpus — the scale dial is (K, n_probe), both fixed constants."""
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    assign = ivf_assign(corpus.repartition(par), centroids, id_col, emb_col, 1)
-    probes = ivf_assign(
-        queries.select(F.col(query_id_col), F.col(emb_col)),
-        centroids,
+    corpus — the scale dial is (K, n_probe), both fixed constants.  The
+    assignment kernel carries each row into ``_ivf_topk``, the re-rank
+    tail ``search_ivf_index`` shares."""
+    cents = _centroids(centroids)
+    # a row without an id cannot be named in an answer (the SQL replay
+    # joins candidates back to the corpus by id)
+    lists = _assign(
+        corpus.where(F.col(id_col).isNotNull()), cents, id_col, emb_col, 1,
+        (emb_col, *extra_cols),
+    ).drop("__cos")
+    return _ivf_topk(
+        lists, queries, cents, k, n_probe, min_score, id_col, emb_col,
         query_id_col,
-        emb_col,
-        n_probe,
-    ).withColumnRenamed(query_id_col, "__qid")
-    cand = (
-        probes.join(assign, "cid")
-        .select("__qid", id_col)
-        .distinct()
-        .join(corpus.select(id_col, emb_col, *extra_cols), id_col)
-    )
-    return rerank_topk(
-        cand, queries, k, min_score, id_col, emb_col, query_id_col
     )
 
 
@@ -476,53 +585,30 @@ def kmeans_refine(
     round_dp: int = 6,
 ) -> DataFrame:
     """Lloyd's k-means as dataflow, refining the IVF coarse quantizer:
-    per iteration, assign every vector to its max-cosine centroid
-    (partial-agg max-of-struct — no window over the corpus), then the
-    new centroid is the element-wise mean of its members.
+    per iteration, assign every vector to its max-cosine centroid (the
+    row-wise ``_assign`` kernel against the driver-collected centroid
+    set), then the new centroid is the element-wise mean of its members.
 
     Components round to ``round_dp`` after each iteration — this pins
     cross-engine float parity (mean summation order differs between
     engines) and is also the right production choice: quantizer
     centroids don't need 52 mantissa bits.  Empty clusters die (standard
-    Lloyd behavior), deterministically.  Each iteration is one
-    assign-join + one (cid, pos) aggregation: shuffle volume is
-    corpus-linear per iteration, K·dim rows afterwards."""
-    # the corpus×K scoring is CPU-bound fold arithmetic: spread it over
-    # all cores once up front (small-file scans arrive as 1-2 splits)
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus = corpus.select(F.col(id_col), F.col(emb_col)).repartition(par)
+    Lloyd behavior), deterministically.  Each iteration collects the
+    K-row centroid set once, then runs one (cid, pos) aggregation:
+    shuffle volume is corpus-linear per iteration, K·dim rows
+    afterwards."""
+    corpus = corpus.select(F.col(id_col), F.col(emb_col))
     cents = centroids
 
-    # each Lloyd iteration is THREE shuffles: the argmax-assignment
-    # carries the member embedding inside the aggregate (max-of-struct +
-    # first(emb) — every row in the group holds the same vector, so
-    # first() is deterministic), killing the assignment⋈corpus re-join
-    # the naive formulation needs; then the element-wise means go
-    # posexplode → (cid, pos) partial-agg → collect_list.  (A fused
-    # applyInPandas mean was tried and measured SLOWER at bench scale —
-    # the Python exchange costs more than the saved JVM shuffle.)
+    # the assignment kernel carries each member's embedding, so no
+    # assignment⋈corpus re-join; the element-wise means go posexplode →
+    # (cid, pos) partial-agg → collect_list.  (A fused applyInPandas
+    # mean was tried and measured SLOWER at bench scale — the Python
+    # exchange costs more than the saved JVM shuffle.)
     for _ in range(iterations):
-        scored = (
-            corpus.crossJoin(F.broadcast(cents))
-            .withColumn(
-                "__cos", cosine_similarity(F.col(emb_col), F.col("cv"))
-            )
-            .where(F.col("__cos").isNotNull() & (~F.isnan("__cos")))
-        )
-        assigned = (
-            scored.groupBy(id_col)
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("__cos").alias("c"),
-                        (-F.col("cid")).alias("nc"),
-                        F.col("cid").alias("cid"),
-                    )
-                ).alias("__b"),
-                F.first(F.col(emb_col)).alias("__e"),
-            )
-            .select(F.col("__b.cid").alias("cid"), "__e")
-        )
+        assigned = _assign(
+            corpus, _centroids(cents), id_col, emb_col, 1, (emb_col,)
+        ).select("cid", F.col(emb_col).alias("__e"))
         means = (
             assigned.select(
                 "cid", F.posexplode(F.col("__e")).alias("pos", "val")
@@ -608,6 +694,28 @@ def sq8_dequant(codes: Column, mn: list[float], mx: list[float]) -> Column:
     return F.zip_with(scaled, mn_l, lambda s, m: m + s)
 
 
+def _rescore_topk(pool, k, min_score, id_col, emb_col, query_id_col):
+    """The exact tail of the quantized searches (SQ8, PQ, IVF-PQ): each
+    approximate survivor in ``pool`` re-scores by exact cosine against
+    the ``__qvec`` it carries, NaN-safe inclusive threshold, per-query
+    top-k (ties by id), 6dp output rounding."""
+    raw = cosine_similarity(F.col(emb_col), F.col("__qvec"))
+    w = Window.partitionBy("__qid").orderBy(F.desc("__raw"), F.asc(id_col))
+    return (
+        pool.withColumn("__raw", raw)
+        .where(
+            F.col("__raw").isNotNull()
+            & (~F.isnan("__raw"))
+            & (F.col("__raw") >= F.lit(float(min_score)))
+        )
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .withColumn("score", F.round(F.col("__raw"), 6))
+        .drop("__rn", "__raw", "__qvec", emb_col)
+        .withColumnRenamed("__qid", query_id_col)
+    )
+
+
 def knn_batch_sq8(
     corpus: DataFrame,
     queries: DataFrame,
@@ -659,21 +767,7 @@ def knn_batch_sq8(
         .where(F.col("__arn") <= k * refine)
         .drop("__arn", "__araw", "__dq")
     )
-    rescored = cand.withColumn(
-        "__raw", cosine_similarity(F.col(emb_col), F.col("__qvec"))
-    ).where(
-        F.col("__raw").isNotNull()
-        & (~F.isnan("__raw"))
-        & (F.col("__raw") >= F.lit(float(min_score)))
-    )
-    w = Window.partitionBy("__qid").orderBy(F.desc("__raw"), F.asc(id_col))
-    return (
-        rescored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .withColumn("score", F.round(F.col("__raw"), 6))
-        .drop("__rn", "__raw", "__qvec", emb_col)
-        .withColumnRenamed("__qid", query_id_col)
-    )
+    return _rescore_topk(cand, k, min_score, id_col, emb_col, query_id_col)
 
 
 def hard_negatives(
@@ -763,8 +857,8 @@ def _split_oversized_clusters(
          the mega-cluster;
       3. members score against ONLY their own cluster's seeds (hash
          join on cid — never a corpus × seeds cross) and take the
-         argmax dot (unit vectors: dot ≡ cosine) via the same
-         partial-agg max-of-struct as the coarse assignment; exact dot
+         argmax dot (unit vectors: dot ≡ cosine) via a partial-agg
+         max-of-struct; exact dot
          TIES break by a per-(member, seed) hash, so a cluster of
          byte-identical embeddings spreads uniformly across its seeds
          instead of collapsing into one sub-bucket;
@@ -881,9 +975,9 @@ def semantic_dedup(
     Scale shape: this is the published algorithm's cost model — the
     pairwise stage runs per cluster, so work is Σ|cluster|², bounded by
     (N/K)·N when K grows with the corpus; never an all-pairs N².  The
-    assignment reuses the partial-agg argmax (no window over the
-    corpus); both sides of the pair join arrive hash-partitioned on
-    ``cid`` — one exchange feeds the self-join.
+    assignment is the row-wise IVF kernel (``_assign``, which also
+    yields the centroid similarity); both sides of the pair join arrive
+    hash-partitioned on ``cid`` — one exchange feeds the self-join.
 
     ``max_cluster_size`` is the SKEW GUARD (VERDICT r5 #6): K ∝ N bounds
     the *average* cluster, but one degenerate hot cluster (boilerplate,
@@ -902,37 +996,11 @@ def semantic_dedup(
     Default ``None`` preserves exact published semantics (and the
     registered oracle's replay).
     """
-    from merkonvectordb_spark.operators.skew import spread_small_scan
-
-    # corpus×K scoring is CPU-bound interpreted fold arithmetic; a
-    # narrow scan (small file = 1-2 splits) would run it serially
-    # (measured round 10: 4.0 s on 2 tasks = 40 % of the query wall).
-    # spread_small_scan is a no-op once the scan arrives wider than the
-    # core count, so nothing changes at cluster scale.
-    scored = (
-        spread_small_scan(corpus.select(F.col(id_col), F.col(emb_col)))
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("__cos", cosine_similarity(F.col(emb_col), F.col("cv")))
-        .where(F.col("__cos").isNotNull() & (~F.isnan("__cos")))
-    )
-    assigned = (
-        scored.groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__cos").alias("c"),
-                    (-F.col("cid")).alias("nc"),
-                    F.col("cid").alias("cid"),
-                )
-            ).alias("__b"),
-            F.first(F.col(emb_col)).alias("__e"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("__b.cid").alias("cid"),
-            F.col("__b.c").alias("__csim"),
-            "__e",
-        )
+    assigned = _assign(
+        corpus, _centroids(centroids), id_col, emb_col, 1, (emb_col,)
+    ).select(
+        F.col(id_col), "cid", F.col("__cos").alias("__csim"),
+        F.col(emb_col).alias("__e"),
     )
     # three consumers (both sides of the pair self-join + the final
     # left join) — without persist each re-runs the corpus×K scoring.
@@ -944,8 +1012,6 @@ def semantic_dedup(
     # with a single dot fold instead of cosine's three — the
     # pre-normalized-corpus trick from operators.search.  Zero-norm rows
     # can't reach this point (their centroid score is NULL-filtered).
-    from merkonvectordb_spark.functions.vector import dot_product, l2_normalize
-
     assigned = assigned.withColumn(
         "__eu", l2_normalize(F.col("__e"))
     ).persist()
@@ -1156,21 +1222,7 @@ def knn_batch_pq(
         .where(F.col("__arn") <= k * refine)
         .drop("__arn", "__araw", "__codes", "__qtab")
     )
-    rescored = cand.withColumn(
-        "__raw", cosine_similarity(F.col(emb_col), F.col("__qvec"))
-    ).where(
-        F.col("__raw").isNotNull()
-        & (~F.isnan("__raw"))
-        & (F.col("__raw") >= F.lit(float(min_score)))
-    )
-    w = Window.partitionBy("__qid").orderBy(F.desc("__raw"), F.asc(id_col))
-    return (
-        rescored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .withColumn("score", F.round(F.col("__raw"), 6))
-        .drop("__rn", "__raw", "__qvec", emb_col)
-        .withColumnRenamed("__qid", query_id_col)
-    )
+    return _rescore_topk(cand, k, min_score, id_col, emb_col, query_id_col)
 
 
 def knn_batch_ivfpq(
@@ -1205,20 +1257,24 @@ def knn_batch_ivfpq(
     # implicitly later, after paying full PQ encoding
     dim = m * len(cb[0][0])
     corpus = corpus.where(F.size(F.col(emb_col)) == dim)
-    assign = ivf_assign(corpus, centroids, id_col, emb_col, 1)
-    coded = corpus.select(
-        id_col,
-        emb_col,
-        *extra_cols,
-        pq_codes(emb_col, cb).alias("__codes"),
-    ).join(assign, id_col)
-    probes = ivf_assign(
-        queries.select(F.col(query_id_col), F.col(emb_col)),
-        centroids,
-        query_id_col,
-        emb_col,
-        n_probe,
-    ).withColumnRenamed(query_id_col, "__qid")
+    cents = _centroids(centroids)
+    coded = _assign(
+        corpus, cents, id_col, emb_col, 1, (emb_col, *extra_cols)
+    ).select(
+        id_col, emb_col, *extra_cols, pq_codes(emb_col, cb).alias("__codes"),
+        "cid",
+    )
+    # driver-side probing (the knn_batch_ivf probe), rebuilt as a
+    # metadata-sized (qid, cid) frame for the ADC join
+    qids, groups = collect_queries(
+        queries.where(F.col(query_id_col).isNotNull()), query_id_col,
+        emb_col, k,
+    )
+    probes = queries.sparkSession.createDataFrame(
+        _probe(qids, groups, cents, n_probe)[2],
+        f"__qid {queries.schema[query_id_col].dataType.simpleString()}, "
+        f"cid {cents[0].simpleString()}",
+    )
     qmeta = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("__qid"),
@@ -1249,18 +1305,4 @@ def knn_batch_ivfpq(
         .where(F.col("__arn") <= k * refine)
         .drop("__arn", "__araw", "__codes", "__qtab", "cid")
     )
-    rescored = pool.withColumn(
-        "__raw", cosine_similarity(F.col(emb_col), F.col("__qvec"))
-    ).where(
-        F.col("__raw").isNotNull()
-        & (~F.isnan("__raw"))
-        & (F.col("__raw") >= F.lit(float(min_score)))
-    )
-    w = Window.partitionBy("__qid").orderBy(F.desc("__raw"), F.asc(id_col))
-    return (
-        rescored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .withColumn("score", F.round(F.col("__raw"), 6))
-        .drop("__rn", "__raw", "__qvec", emb_col)
-        .withColumnRenamed("__qid", query_id_col)
-    )
+    return _rescore_topk(pool, k, min_score, id_col, emb_col, query_id_col)

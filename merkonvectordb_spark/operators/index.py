@@ -11,12 +11,13 @@ amortizes it:
   inverted list is its own partition directory — plus the centroid set
   as a second (tiny) versioned table.  Versioning gives atomic publish,
   snapshot isolation, and index rebuilds as time travel.
-* **search**: probe each query's ``n_probe`` nearest centroids, collect
-  the probed cid set to the driver (≤ n_probe × |queries| ints —
-  metadata-sized by construction), and scan ONLY those partitions of
-  the lists table (static partition pruning over the manifest's file
-  list — the scan touches n_probe/K of the index, which is the entire
-  point).  Candidates re-rank by exact cosine; embeddings live in the
+* **search**: collect the query set and the index's K centroids (both
+  metadata-sized), pick each query's ``n_probe`` nearest centroids on
+  the driver, and scan ONLY those partitions of the lists table (a
+  literal ``cid IN (...)`` filter: static partition pruning over the
+  manifest's file list — the scan touches n_probe/K of the index, which
+  is the entire point).  One Arrow kernel scores each list row against
+  the queries probing its list, by exact cosine; embeddings live in the
   index rows, so search never touches the original corpus table.
 
 Same retrieval semantics as ``knn_batch_ivf`` (a search against a
@@ -33,10 +34,9 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from merkonvectordb_spark.functions.vector import cosine_similarity
 from merkonvectordb_spark.operators.ann import IVF_N_PROBE, ivf_assign
 from merkonvectordb_spark.sources.versioned import VersionedTable
 
@@ -68,6 +68,17 @@ class IvfIndex:
         )
 
 
+def _index_rows(df, centroids, id_col, emb_col, extra_cols) -> DataFrame:
+    """``(id, cid INT, emb, extra...)``: each row of ``df`` in its best list."""
+    return ivf_assign(
+        df, centroids.select("cid", "cv"), id_col, emb_col, 1,
+        carry=(emb_col, *extra_cols),
+    ).select(
+        F.col(id_col), F.col("cid").cast("int").alias("cid"),
+        emb_col, *extra_cols,
+    )
+
+
 def build_ivf_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -81,29 +92,13 @@ def build_ivf_index(
 
     ``centroids`` carries ``(cid, cv)`` — seed them deterministically or
     refine with ``operators.ann.kmeans_refine`` first; the index stores
-    whatever quantizer it is given.  Assignment is the partial-aggregable
-    corpus×K max-of-struct (``ivf_assign`` n_best=1): shuffle volume is
-    one struct per corpus row, then the write clusters rows by cid so
-    each list is one partition directory.
+    whatever quantizer it is given.  Assignment is the row-wise
+    ``ivf_assign`` kernel (n_best=1): it carries each row's payload
+    (embedding + extras), so the index rows come straight out of one
+    corpus pass — no aggregate, no re-join, no exchange before the write
+    clusters rows by cid so each list is one partition directory.
     """
-    from merkonvectordb_spark.operators.skew import spread_small_scan
-
-    # the corpus×K scoring is CPU-bound; spread a narrow (small-file)
-    # scan over the cores first — no-op when the scan is already wide.
-    # carry= threads the payload (embedding + extras) THROUGH the
-    # assignment aggregate (first() over a constant group — every
-    # pre-agg row of an id holds the same payload), so the index rows
-    # come straight out of the agg: no assignment⋈corpus re-join, no
-    # second corpus scan, one fewer exchange per build (guide §2.4) —
-    # shuffle volume is unchanged (the payload crossed in the join's
-    # corpus-side exchange before).
-    rows = ivf_assign(
-        spread_small_scan(corpus), centroids, id_col, emb_col, 1,
-        carry=(emb_col, *extra_cols),
-    ).select(
-        F.col(id_col), F.col("cid").cast("int").alias("cid"),
-        emb_col, *extra_cols,
-    )
+    rows = _index_rows(corpus, centroids, id_col, emb_col, extra_cols)
     idx = IvfIndex(spark, root, _ddl_of(rows))
     # commit ORDER matters: centroids first, then lists carrying the
     # PAIRED centroids version in its manifest txn metadata.  The two
@@ -154,41 +149,27 @@ def append_to_ivf_index(
     re-assigned, re-shuffled, or rewritten.  Returns the new lists
     version.
 
-    This is the ingest path a live 100 TB deployment runs between
-    rebuilds: per-batch cost is |batch|×K assignment plus a
-    partition-clustered append (new files land inside the touched cid
-    directories; old files are untouched), so keeping the index fresh
-    costs the batch, not the corpus.  Because per-row assignment is
-    independent given a fixed quantizer, searching the appended version
-    is bit-identical to searching an index built from scratch over the
-    union corpus with the same centroids — the invariant
-    ``test_index`` pins and the ``knn_batch_ivf`` oracle checks.
-
-    The quantizer used is the one PAIRED with the current lists version
-    (carried in the lists manifest's txn metadata and propagated forward
-    by every append), so a concurrent centroids-table write can never
-    skew a batch's assignment.  Time travel still works: searching the
-    pre-append version excludes the batch.
+    Per-batch cost is |batch|×K assignment plus a partition-clustered
+    append (new files land inside the touched cid directories), so
+    keeping the index fresh costs the batch, not the corpus.  Per-row
+    assignment is independent given a fixed quantizer, so searching the
+    appended version is bit-identical to searching an index built from
+    scratch over the union corpus with the same centroids (``test_index``
+    pins it).  The quantizer used is the one PAIRED with the current
+    lists version (carried forward in the lists manifest's txn
+    metadata), so a concurrent centroids-table write never skews a
+    batch's assignment.  Searching the pre-append version excludes the
+    batch.
 
     Callers own dedup: appending an id that already exists yields two
-    index rows (use ``operators.store.upsert`` semantics upstream, or
-    rebuild).  Quantizer drift is the rebuild trigger — monitor with
+    index rows, as do two rows sharing an id within one batch.
+    Quantizer drift is the rebuild trigger — monitor with
     ``queries_ann.q_embedding_drift_report``.
     """
     v = idx.lists.current_version()
     paired = idx.lists._txn_map(v).get(_PAIRED_CENTROIDS)
     cents = idx.centroids.read(paired)
-    from merkonvectordb_spark.operators.skew import spread_small_scan
-
-    # carry= threads the payload through the assignment aggregate (see
-    # build_ivf_index): no batch⋈assignment re-join, no second batch scan
-    rows = ivf_assign(
-        spread_small_scan(new_rows), cents.select("cid", "cv"), id_col,
-        emb_col, 1, carry=(emb_col, *extra_cols),
-    ).select(
-        F.col(id_col), F.col("cid").cast("int").alias("cid"),
-        emb_col, *extra_cols,
-    )
+    rows = _index_rows(new_rows, cents, id_col, emb_col, extra_cols)
     # append propagates the full txn map (including the paired-centroids
     # pointer) into the new manifest — see VersionedTable._publish
     return idx.lists.append(rows)
@@ -230,12 +211,13 @@ def search_ivf_index(
     """Batch top-k against the persisted index (optionally a past
     ``version`` — time-travel search over an older index build).
 
-    The probed cid set is collected to the driver and pushed as a
+    The query set and the quantizer are collected to the driver, which
+    picks each query's ``n_probe`` lists; the probed cid set becomes a
     LITERAL partition filter, so the lists scan plans with static
-    partition pruning: only n_probe-per-query list directories are read.
+    partition pruning: only the probed list directories are read.
     Candidates carry their embeddings from the index rows; the exact
-    re-rank is the same broadcast-queries + per-query bounded top-k tail
-    as the in-memory operators.
+    re-rank is ``knn_batch_ivf``'s own tail (``ann._ivf_topk``), so a
+    search of a freshly built index returns its results bit for bit.
 
     ``version`` pins the LISTS table; the quantizer read is the
     centroids version PAIRED with that lists commit (recorded at build
@@ -243,41 +225,14 @@ def search_ivf_index(
     desyncs as soon as either table takes a single-table maintenance
     write.
     """
+    from merkonvectordb_spark.operators.ann import _centroids, _ivf_topk
+
     v_lists = (
         idx.lists.current_version() if version is None else version
     )
     paired = idx.lists._txn_map(v_lists).get(_PAIRED_CENTROIDS)
-    cents = idx.centroids.read(paired)  # None (legacy) → latest
-    probes = ivf_assign(
-        queries.select(F.col(query_id_col), F.col(emb_col)),
-        cents.select("cid", "cv"),
-        query_id_col,
-        emb_col,
-        n_probe,
-    ).withColumnRenamed(query_id_col, "__qid")
-    # ONE assignment job: collect the metadata-sized (qid, cid) pairs
-    # and rebuild the probe frame from them — referencing `probes`
-    # lazily in the search plan would re-run the queries×K scoring a
-    # second time
-    qid_t = queries.schema[query_id_col].dataType.simpleString()
-    pairs = [
-        (r["__qid"], int(r["cid"]))
-        for r in probes.select("__qid", "cid").collect()
-    ]
-    probe_cids = sorted({c for _, c in pairs})
-    probes_df = idx.spark.createDataFrame(
-        pairs, f"__qid {qid_t}, cid INT"
-    )
-    lists = idx.lists.read(v_lists).where(F.col("cid").isin(probe_cids))
-    # assignment is n_best=1, so every id lives in exactly ONE list: a
-    # query meets each candidate at most once through its probes — no
-    # distinct, no second join; the probe-join rows carry the candidate
-    # embedding straight out of the index
-    cand = F.broadcast(probes_df).join(lists, "cid").drop("cid")
-    # the exact re-rank tail is SHARED with knn_batch_ivf (ann.rerank_topk)
-    # — the "bit-identical results" promise holds by construction
-    from merkonvectordb_spark.operators.ann import rerank_topk
-
-    return rerank_topk(
-        cand, queries, k, min_score, id_col, emb_col, query_id_col
+    cents = _centroids(idx.centroids.read(paired))  # None (legacy) → latest
+    return _ivf_topk(
+        idx.lists.read(v_lists), queries, cents, k, n_probe, min_score,
+        id_col, emb_col, query_id_col,
     )

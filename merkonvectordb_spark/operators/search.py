@@ -190,12 +190,25 @@ def knn_batch(
     corpus = vectors
     if "key" in corpus.columns:
         corpus = corpus.where(F.col("key").isNotNull() & (F.col("key") != ""))
-    qid_type = queries.schema[query_id_col].dataType
-    qids, by_dim = [], {}
-    qrows = (
-        queries.select(query_id_col, query_embedding_col).collect()
-        if k > 0 else []
+    qids, groups = collect_queries(
+        queries, query_id_col, query_embedding_col, k, assume_normalized
     )
+    order = [F.desc("__raw")]
+    if tie_break and tie_break in vectors.columns:
+        order.append(F.asc(tie_break))
+    return kernel_topk(
+        corpus, qids, groups, queries.schema[query_id_col].dataType, k,
+        min_score, embedding_col, query_id_col, order, assume_normalized,
+    )
+
+
+def collect_queries(queries, query_id_col, emb_col, k, assume_normalized=False):
+    """The query set on the driver for ``kernel_topk``: the ids by
+    position and ``(positions, (m, d) matrix)`` groups of one dimension
+    each, at most ``_QUERY_CHUNK`` queries per group.  Nothing is
+    collected when ``k <= 0``."""
+    qids, by_dim = [], {}
+    qrows = queries.select(query_id_col, emb_col).collect() if k > 0 else []
     for qid, vec in qrows:
         if not vec:  # NULL or empty: unscorable
             continue
@@ -214,21 +227,31 @@ def knn_batch(
         for qs in by_dim.values()
         for lo in range(0, len(qs), _QUERY_CHUNK)
     ]
-    qid_arrow = to_arrow_type(qid_type)
+    return qids, groups
+
+
+def kernel_topk(
+    corpus, qids, groups, qid_type, k, min_score, emb_col, query_id_col,
+    order, dot_only=False, route=None,
+):
+    """Per-query top-k of ``corpus`` against a driver-held query set
+    (``collect_queries``): one ``_topk_kernel`` pass, then
+    ``row_number() <= k`` over ``Window.partitionBy(qid).orderBy(order)``
+    and 6dp output rounding.  ``route`` (see ``_topk_kernel``) restricts
+    which queries each row meets; its key column leaves the output.
+    Out go ``corpus``'s other columns, ``query_id_col`` and ``score``."""
+    drop = {emb_col, route[0]} if route else {emb_col}
     out_schema = T.StructType(
-        [f for f in corpus.schema.fields if f.name != embedding_col]
+        [f for f in corpus.schema.fields if f.name not in drop]
         + [
             T.StructField("__qid", qid_type),
             T.StructField("__raw", T.DoubleType()),
         ]
     )
     kernel = _topk_kernel(
-        embedding_col, groups, qids, qid_arrow, k, float(min_score),
-        assume_normalized,
+        emb_col, groups, qids, to_arrow_type(qid_type), k, float(min_score),
+        dot_only, route,
     )
-    order = [F.desc("__raw")]
-    if tie_break and tie_break in vectors.columns:
-        order.append(F.asc(tie_break))
     w = Window.partitionBy("__qid").orderBy(*order)
     return (
         corpus.mapInArrow(kernel, out_schema)
@@ -240,15 +263,26 @@ def knn_batch(
     )
 
 
-def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only):
-    """The ``knn_batch`` Arrow kernel: ``groups`` lists (query positions,
-    (m, d) query matrix) pairs of one dimension each; ``qids`` are the
-    ids by position.  Per record batch and group it scores the rows of
-    that width against the group's queries, keeps pairs with a raw score
-    ``>= min_score`` (NaN — zero norm, NaN or NULL elements — never
-    passes), and of those, per query, the ones at or above the k-th
-    largest raw score.  Out go the batch's other columns, ``__qid`` and
-    ``__raw``."""
+def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only,
+                 route=None):
+    """The Arrow kernel of ``kernel_topk``: ``groups`` lists (query
+    positions, (m, d) query matrix) pairs of one dimension each; ``qids``
+    are the ids by position.  Per record batch and group it scores the
+    rows of that width against the group's queries, keeps pairs with a
+    raw score ``>= min_score`` (NaN — zero norm, NaN or NULL elements —
+    never passes), and of those, per query, the ones at or above the
+    k-th largest raw score.  Out go the batch's other columns, ``__qid``
+    and ``__raw``.
+
+    ``route=(key_col, keys, member)`` scores a row only against the
+    queries its key admits: ``member[i, p]`` says whether a row keyed
+    ``keys[i]`` meets query position ``p`` (IVF: a list id and the
+    queries probing that list; LSH re-rank: a candidate's query id and
+    that id's vectors).  Rows with other keys drop.  The admitted pairs
+    are gathered from the driver matrix and folded row-wise, in chunks
+    of at most 2^22 elements."""
+    key_col, keys, member = route if route else (None, (), None)
+    drop = [emb_col, key_col] if route else [emb_col]
 
     def kernel(batches):
         import pyarrow as pa
@@ -256,10 +290,19 @@ def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only):
 
         from merkonvectordb_spark.functions.vector import fold_cosine, fold_dot
 
+        fold = fold_dot if dot_only else fold_cosine
         qid_arr = pa.array(qids, type=qid_arrow)
+        key_arr = pa.array(list(keys))
         for rb in batches:
             emb = rb.column(emb_col)
             width = pc.list_value_length(emb).fill_null(-1).to_numpy()
+            if route:
+                kcol = rb.column(key_col)
+                kidx = (
+                    pc.index_in(kcol, value_set=key_arr.cast(kcol.type))
+                    .fill_null(-1).to_numpy()
+                )
+                width = np.where(kidx >= 0, width, -1)
             rows, qpos, raw = [], [], []
             for pos, qmat in groups:
                 d = qmat.shape[1]
@@ -270,7 +313,15 @@ def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only):
                     emb.take(sel).flatten().to_numpy(zero_copy_only=False)
                     .astype(np.float64).reshape(-1, 1, d)
                 )
-                score = (fold_dot if dot_only else fold_cosine)(a, qmat[None])
+                if route:
+                    r, c = np.nonzero(member[:, pos][kidx[sel]])
+                    score = np.full((sel.size, len(pos)), np.nan)
+                    step = max(1, (1 << 22) // max(d, 1))
+                    for lo in range(0, r.size, step):
+                        rr, cc = r[lo : lo + step], c[lo : lo + step]
+                        score[rr, cc] = fold(a[rr, 0], qmat[cc])
+                else:
+                    score = fold(a, qmat[None])
                 ok = score >= min_score
                 if sel.size > k:
                     # k-th largest passing score per query (-inf when
@@ -286,7 +337,7 @@ def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only):
             if sum(map(len, rows)) == 0:
                 continue
             rows = np.concatenate(rows)
-            out = rb.drop_columns([emb_col]).take(rows)
+            out = rb.drop_columns(drop).take(rows)
             yield pa.RecordBatch.from_arrays(
                 out.columns
                 + [qid_arr.take(np.concatenate(qpos)), pa.array(np.concatenate(raw))],

@@ -103,21 +103,6 @@ def test_ivf_recall_on_clustered_data(clustered, spark):
     assert recall >= 0.9, f"IVF clustered-data recall {recall:.2f} < 0.9"
 
 
-def test_ivf_assignment_is_partial_aggregable(clustered):
-    from merkonvectordb_spark.operators.ann import ivf_assign
-
-    cents = clustered.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("cid"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
-    )
-    df = ivf_assign(clustered, cents, "vec_id", n_best=1)
-    plan = executed_plan(df)
-    # corpus assignment must partial-aggregate (map-side combine), never
-    # shuffle the corpus×K scored rows through a window
-    assert "Window" not in plan
-    assert "partial" in plan.lower()
-
-
 def _ivf_cents(clustered):
     return clustered.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("cid"),

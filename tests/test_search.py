@@ -343,11 +343,11 @@ def test_prenormalized_store_search(spark, tmp_path):
 
 def test_knn_wide_embeddings_d1536(spark):
     # ada-002 dimensionality: the query vector must ship as ONE array
-    # literal (vector_literal), not 1536 expression nodes; the Arrow
-    # cosine must agree with it at this width
+    # literal (vector_literal), not 1536 expression nodes; the numpy
+    # fold must agree with it at this width
     import numpy as np
 
-    from merkonvectordb_spark.functions.vector import cosine_similarity_pandas
+    from merkonvectordb_spark.functions.vector import fold_cosine
 
     rng = np.random.default_rng(5)
     vecs = rng.normal(size=(40, 1536)).astype("float32")
@@ -357,11 +357,7 @@ def test_knn_wide_embeddings_d1536(spark):
     )
     q = [float(x) for x in vecs[0]]
     expr_top = knn(df, q, k=5, min_score=-1.0, tie_break="vec_id").collect()
-    pandas_top = (
-        df.withColumn("score", cosine_similarity_pandas(q)(F.col("embedding")))
-        .orderBy(F.desc("score"), "vec_id")
-        .limit(5)
-        .collect()
-    )
-    assert [r.vec_id for r in expr_top] == [r.vec_id for r in pandas_top]
+    cos = fold_cosine(vecs, np.array(q))
+    fold_top = sorted(range(40), key=lambda i: (-cos[i], i))[:5]
+    assert [r.vec_id for r in expr_top] == fold_top
     assert expr_top[0].vec_id == 0 and abs(expr_top[0].score - 1.0) < 1e-6

@@ -10,8 +10,8 @@ from pyspark.sql import types as T
 
 from merkonvectordb_spark.functions.vector import (
     cosine_similarity,
-    cosine_similarity_pandas,
     dot_product,
+    fold_cosine,
     l2_norm,
     l2_normalize,
     vector_literal,
@@ -76,7 +76,9 @@ def test_cosine_range_and_null_on_zero(spark):
         assert v is None or -1.0 - 1e-9 <= v <= 1.0 + 1e-9
 
 
-def test_cosine_pandas_matches_expression(spark):
+def test_fold_cosine_matches_expression(spark):
+    """``fold_cosine``, the Arrow kernels' scoring, gives the expression's
+    doubles against a query literal, and NaN where it gives NULL."""
     rng = np.random.default_rng(11)
     q = rng.normal(size=16).astype("float32").tolist()
     rows = [
@@ -86,15 +88,36 @@ def test_cosine_pandas_matches_expression(spark):
     expr = df.select(
         "id", cosine_similarity(F.col("a"), vector_literal(q)).alias("c")
     )
-    pnd = df.select("id", cosine_similarity_pandas(q)(F.col("a")).alias("c"))
     e = {r.id: r.c for r in expr.collect()}
-    p = {r.id: r.c for r in pnd.collect()}
-    assert set(e) == set(p)
-    for k in e:
-        if e[k] is None:
-            assert p[k] is None  # unscorable rows: NULL in both paths
+    got = fold_cosine(np.array([r[1] for r in rows], dtype=np.float32), q)
+    assert set(e) == {r[0] for r in rows}
+    for (i, _, _), p in zip(rows, got):
+        if e[i] is None:
+            assert np.isnan(p)  # unscorable: NULL expression, NaN fold
         else:
-            assert p[k] == e[k]  # bit-identical: the same left-to-right fold
+            assert p == e[i]  # bit-identical: the same left-to-right fold
+
+
+@pytest.mark.parametrize("dim", [64, 1536])
+def test_vector_literal_is_one_literal_with_the_old_scores(spark, dim):
+    """The query vector is one expression node — a JSON string the
+    optimizer folds into one array literal — where ``F.lit(list)``
+    builds one literal per element for the analyzer, and the scores
+    equal those of that per-element form exactly."""
+    rng = np.random.default_rng(dim)
+    q = rng.normal(size=dim).tolist()
+    df = spark.createDataFrame(
+        [(i, rng.normal(size=dim).astype("float32").tolist(), None)
+         for i in range(20)],
+        SCHEMA,
+    )
+    new = df.select("id", cosine_similarity(F.col("a"), vector_literal(q)).alias("c"))
+    old = df.select("id", cosine_similarity(F.col("a"), F.lit(q)).alias("c"))
+    qe, old_qe = new._jdf.queryExecution(), old._jdf.queryExecution()
+    assert "array(" in old_qe.analyzed().toString()  # one node per element
+    assert "array(" not in qe.analyzed().toString()
+    assert "from_json" not in qe.optimizedPlan().toString()  # folded
+    assert sorted(new.collect()) == sorted(old.collect())
 
 
 def test_l2_normalize_unit_norm(spark):

@@ -93,32 +93,18 @@ ALLOW: dict[tuple[str, str], str] = {
         "first-missing-rank scalar for the prefix cut (1 row)",
     ("quality_quantile_filter", "nested_loop"):
         "p25 threshold scalar crossJoined back to the corpus (1 row)",
-    ("knn_batch_ivf", "nested_loop"):
-        "fixed-K centroid set (K=16) broadcast against the corpus",
-    ("knn_batch_ivf_kmeans", "nested_loop"):
-        "fixed-K centroid set broadcast in assignment + Lloyd iterations",
     ("knn_batch_sq8", "nested_loop"):
         "per-dimension min/max codebook stats (1 row) broadcast for "
         "quantize/dequantize",
     ("knn_batch_pq", "nested_loop"):
         "fixed query batch (Q=5) with its 128-entry ADC tables "
         "broadcast against the coded corpus — |corpus|×Q, Q constant",
-    ("knn_batch_ivfpq", "nested_loop"):
-        "fixed-K centroid set broadcast for assignment/probing (same "
-        "shape as knn_batch_ivf)",
     ("mmr_rerank", "nested_loop"):
         "fixed query batch (Q=5) broadcast for candidate scoring — "
         "|corpus|×Q, Q constant",
-    ("semantic_dedup", "nested_loop"):
-        "fixed-K centroid set broadcast for cluster assignment (same "
-        "shape as knn_batch_ivf)",
-    ("semantic_dedup_capped", "nested_loop"):
-        "fixed-K centroid set broadcast for cluster assignment (same "
-        "shape as semantic_dedup; the cap adds only hash joins)",
     ("semantic_decontam", "nested_loop"):
         "fixed eval-benchmark set (25 vectors) broadcast against the "
-        "training corpus — |corpus|×K with K constant (same shape as "
-        "knn_batch_ivf assignment)",
+        "training corpus — |corpus|×K with K constant",
     ("hist_quantiles", "nested_loop"):
         "global min/max/count scalar (1 row) crossJoined for binning "
         "and interpolation",
@@ -166,8 +152,7 @@ ALLOW: dict[tuple[str, str], str] = {
     ("router_knn_batch", "nested_loop"):
         "the routed arms reuse the standalone backends' plans verbatim "
         "— the per-round arm rotation can include sq8 (1-row codebook "
-        "stats broadcast) or ivfpq (fixed-K centroid broadcast), both "
-        "allowlisted shapes under their own names",
+        "stats broadcast), allowlisted under its own name",
 }
 
 PATTERNS = {
