@@ -359,9 +359,9 @@ def _best(score, n: int):
     return o, np.take_along_axis(score, o, 1)
 
 
-def _assign(df, cents, id_col, emb_col, n_best, carry=()) -> DataFrame:
-    """``(id, cid, __cos, *carry)``: every row of ``df`` with each of its
-    ``n_best`` highest-cosine centroids of its own width (``cents`` from
+def _assign(df, cents, id_col, emb_col, carry=()) -> DataFrame:
+    """``(id, cid, __cos, *carry)``: every row of ``df`` with its
+    highest-cosine centroid of its own width (``cents`` from
     ``_centroids``), ties to the lowest cid, in one row-wise
     ``mapInArrow`` pass.  Rows that score NaN against every centroid —
     NULL, empty, zero-norm, NaN-element or unmatched-width vectors —
@@ -394,7 +394,7 @@ def _assign(df, cents, id_col, emb_col, n_best, carry=()) -> DataFrame:
                         emb.take(s).flatten().to_numpy(zero_copy_only=False)
                         .astype(np.float64).reshape(-1, 1, d)
                     )
-                    o, sc = _best(fold_cosine(a, cmat[None]), n_best)
+                    o, sc = _best(fold_cosine(a, cmat[None]), 1)
                     r, j = np.nonzero(~np.isnan(sc))
                     rows.append(s[r])
                     cid.append(cids[o[r, j]])
@@ -425,10 +425,13 @@ def ivf_assign(
     (ties → lowest centroid id).  ``centroids`` carries (cid, cv).
 
     The K centroids are collected to the driver (index metadata, like
-    ``knn_batch``'s query set) and every row is scored in one row-wise
-    ``mapInArrow`` kernel (``_assign``): no cross join, no aggregate, no
-    exchange.  Assignment is per ROW, so two rows sharing an id each
-    land in their own best lists with their own payload.
+    ``knn_batch``'s query set).  ``n_best=1`` scores every row in one
+    row-wise ``mapInArrow`` kernel (``_assign``): no cross join, no
+    aggregate, no exchange.  Assignment is per ROW, so two rows sharing
+    an id each land in their own best list with their own payload.
+
+    ``n_best > 1`` probes a query set: ``df`` is collected and probed
+    on the driver (``_probes``); a repeated id pools its vectors.
 
     ``carry`` (n_best=1 only) passes extra payload columns of ``df``
     through the kernel, so callers that persist the assignment WITH its
@@ -440,18 +443,39 @@ def ivf_assign(
         raise ValueError(
             f"carry names {clash} collide with ivf_assign's own columns"
         )
+    cents = _centroids(centroids)
+    if n_best == 1:
+        return _assign(df, cents, id_col, emb_col, carry).drop("__cos")
+    return _probes(df, cents, id_col, emb_col, n_best)
+
+
+def _ivf_lists(corpus, cents, id_col, emb_col, carry) -> DataFrame:
+    """``(id, cid, *carry)``: the corpus rows of an IVF search, each in
+    its best list.  A row without an id drops first: it cannot be named
+    in an answer (the SQL replay joins candidates back by id)."""
     return _assign(
-        df, _centroids(centroids), id_col, emb_col, n_best, carry
+        corpus.where(F.col(id_col).isNotNull()), cents, id_col, emb_col,
+        carry,
     ).drop("__cos")
+
+
+def _probes(df, cents, id_col, emb_col, n_probe) -> DataFrame:
+    """``(id, cid)``: the query set ``df``'s probe pairs (``_probe``) as
+    a metadata-sized frame."""
+    qids, groups = collect_queries(df, id_col, emb_col, 1)
+    return df.sparkSession.createDataFrame(
+        _probe(qids, groups, cents, n_probe)[0],
+        T.StructType([df.schema[id_col], T.StructField("cid", cents[0])]),
+    )
 
 
 def _probe(qids, groups, cents, n_probe):
     """Driver-side probing: each query id's ``n_probe`` best centroids
     over ALL its vectors (a repeated id pools them), score descending
-    then cid ascending.  ``qids`` and
-    ``groups`` come from ``search.collect_queries``.  Returns ``(keys,
-    member, pairs)``: the probed cids, ``member[i, p]`` — query position
-    ``p`` probes ``keys[i]`` — and the ``(qid, cid)`` probe pairs."""
+    then cid ascending.  ``qids`` and ``groups`` come from
+    ``search.collect_queries``.  Returns the ``(qid, cid)`` probe pairs,
+    one per pick (two of an id's vectors picking one list give it twice,
+    as the window's rows did), and the (cid, query position) route."""
     _, cgroups = cents
     cids = np.concatenate([c for c, _ in cgroups] or [np.zeros(0, int)])
     score = np.full((len(qids), cids.size), np.nan)
@@ -472,31 +496,22 @@ def _probe(qids, groups, cents, n_probe):
     for q, ps in by_qid.items():  # the id's vectors pooled, cid-major
         o, sc = _best(score[ps].T.reshape(1, -1), n_probe)
         pairs += [(q, int(c)) for c in cids[o[~np.isnan(sc)] // len(ps)]]
-    keys = sorted({c for _, c in pairs})
-    row = {c: i for i, c in enumerate(keys)}
-    member = np.zeros((len(keys), len(qids)), dtype=bool)
-    for q, c in pairs:
-        member[row[c], by_qid[q]] = True
-    return keys, member, pairs
+    return pairs, [(c, p) for q, c in pairs for p in by_qid[q]]
 
 
 def _routed_topk(frame, queries, key_col, route, k, min_score, id_col,
                  emb_col, query_id_col) -> DataFrame:
     """Per-query top-k of ``frame`` in the ``search.kernel_topk`` Arrow
     kernel, each row scored only against the queries its ``key_col``
-    admits: ``route(qids, groups)`` gives ``(keys, member)`` (see
-    ``search._topk_kernel``).  Rows keyed outside ``keys`` are filtered
-    by a literal ``isin`` first — partition pruning on a persisted
-    index.  NULL query ids drop; ties break by ``id_col``.  Out go
+    admits: ``route(qids, groups)`` gives the (key, query position)
+    pairs.  NULL query ids drop; ties break by ``id_col``.  Out go
     ``query_id_col``, ``frame``'s other columns and ``score``."""
     queries = queries.where(F.col(query_id_col).isNotNull())
     qids, groups = collect_queries(queries, query_id_col, emb_col, k)
-    keys, member = route(qids, groups)
     out = kernel_topk(
-        frame.where(F.col(key_col).isin(keys)), qids, groups,
-        queries.schema[query_id_col].dataType, k, min_score, emb_col,
-        query_id_col, [F.desc("__raw"), F.asc(id_col)],
-        route=(key_col, keys, member),
+        frame, qids, groups, queries.schema[query_id_col].dataType, k,
+        min_score, emb_col, query_id_col, [F.desc("__raw"), F.asc(id_col)],
+        route=(key_col, route(qids, groups)),
     )
     rest = [c for c in frame.columns if c not in (key_col, emb_col)]
     return out.select(query_id_col, *rest, "score")
@@ -511,7 +526,7 @@ def _ivf_topk(lists, queries, cents, k, n_probe, min_score, id_col,
     row scored against exactly the queries probing its list."""
     return _routed_topk(
         lists, queries, "cid",
-        lambda qids, groups: _probe(qids, groups, cents, n_probe)[:2],
+        lambda qids, groups: _probe(qids, groups, cents, n_probe)[1],
         k, min_score, id_col, emb_col, query_id_col,
     )
 
@@ -532,16 +547,10 @@ def rerank_topk(
     ``cand`` carries ``__qid`` plus the candidate rows WITH their
     ``emb_col`` (and any extra columns, which pass through).
     """
-
-    def own_query(qids, _):
-        slot = {q: i for i, q in enumerate(dict.fromkeys(qids))}
-        member = np.zeros((len(slot), len(qids)), dtype=bool)
-        member[[slot[q] for q in qids], np.arange(len(qids))] = True
-        return list(slot), member
-
     return _routed_topk(
-        cand, queries, "__qid", own_query, k, min_score, id_col, emb_col,
-        query_id_col,
+        cand, queries, "__qid",
+        lambda qids, _: [(q, p) for p, q in enumerate(qids)],
+        k, min_score, id_col, emb_col, query_id_col,
     )
 
 
@@ -564,12 +573,7 @@ def knn_batch_ivf(
     assignment kernel carries each row into ``_ivf_topk``, the re-rank
     tail ``search_ivf_index`` shares."""
     cents = _centroids(centroids)
-    # a row without an id cannot be named in an answer (the SQL replay
-    # joins candidates back to the corpus by id)
-    lists = _assign(
-        corpus.where(F.col(id_col).isNotNull()), cents, id_col, emb_col, 1,
-        (emb_col, *extra_cols),
-    ).drop("__cos")
+    lists = _ivf_lists(corpus, cents, id_col, emb_col, (emb_col, *extra_cols))
     return _ivf_topk(
         lists, queries, cents, k, n_probe, min_score, id_col, emb_col,
         query_id_col,
@@ -607,7 +611,7 @@ def kmeans_refine(
     # exchange costs more than the saved JVM shuffle.)
     for _ in range(iterations):
         assigned = _assign(
-            corpus, _centroids(cents), id_col, emb_col, 1, (emb_col,)
+            corpus, _centroids(cents), id_col, emb_col, (emb_col,)
         ).select("cid", F.col(emb_col).alias("__e"))
         means = (
             assigned.select(
@@ -997,7 +1001,7 @@ def semantic_dedup(
     registered oracle's replay).
     """
     assigned = _assign(
-        corpus, _centroids(centroids), id_col, emb_col, 1, (emb_col,)
+        corpus, _centroids(centroids), id_col, emb_col, (emb_col,)
     ).select(
         F.col(id_col), "cid", F.col("__cos").alias("__csim"),
         F.col(emb_col).alias("__e"),
@@ -1258,23 +1262,17 @@ def knn_batch_ivfpq(
     dim = m * len(cb[0][0])
     corpus = corpus.where(F.size(F.col(emb_col)) == dim)
     cents = _centroids(centroids)
-    coded = _assign(
-        corpus, cents, id_col, emb_col, 1, (emb_col, *extra_cols)
+    coded = _ivf_lists(
+        corpus, cents, id_col, emb_col, (emb_col, *extra_cols)
     ).select(
         id_col, emb_col, *extra_cols, pq_codes(emb_col, cb).alias("__codes"),
         "cid",
     )
-    # driver-side probing (the knn_batch_ivf probe), rebuilt as a
-    # metadata-sized (qid, cid) frame for the ADC join
-    qids, groups = collect_queries(
-        queries.where(F.col(query_id_col).isNotNull()), query_id_col,
-        emb_col, k,
-    )
-    probes = queries.sparkSession.createDataFrame(
-        _probe(qids, groups, cents, n_probe)[2],
-        f"__qid {queries.schema[query_id_col].dataType.simpleString()}, "
-        f"cid {cents[0].simpleString()}",
-    )
+    # driver-side probing (the knn_batch_ivf probe) for the ADC join
+    probes = _probes(
+        queries.where(F.col(query_id_col).isNotNull()), cents, query_id_col,
+        emb_col, n_probe,
+    ).withColumnRenamed(query_id_col, "__qid")
     qmeta = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("__qid"),

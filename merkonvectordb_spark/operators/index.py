@@ -37,7 +37,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from merkonvectordb_spark.operators.ann import IVF_N_PROBE, ivf_assign
+from merkonvectordb_spark.operators.ann import (
+    IVF_N_PROBE,
+    _centroids,
+    _ivf_lists,
+    _ivf_topk,
+)
 from merkonvectordb_spark.sources.versioned import VersionedTable
 
 _CENTROIDS_DDL = "cid INT, cv ARRAY<DOUBLE>"
@@ -69,10 +74,11 @@ class IvfIndex:
 
 
 def _index_rows(df, centroids, id_col, emb_col, extra_cols) -> DataFrame:
-    """``(id, cid INT, emb, extra...)``: each row of ``df`` in its best list."""
-    return ivf_assign(
-        df, centroids.select("cid", "cv"), id_col, emb_col, 1,
-        carry=(emb_col, *extra_cols),
+    """``(id, cid INT, emb, extra...)``: each row of ``df`` with an id in
+    its best list (``ann._ivf_lists``, the lists ``knn_batch_ivf``
+    searches)."""
+    return _ivf_lists(
+        df, _centroids(centroids), id_col, emb_col, (emb_col, *extra_cols)
     ).select(
         F.col(id_col), F.col("cid").cast("int").alias("cid"),
         emb_col, *extra_cols,
@@ -95,7 +101,7 @@ def build_ivf_index(
     whatever quantizer it is given.  Assignment is the row-wise
     ``ivf_assign`` kernel (n_best=1): it carries each row's payload
     (embedding + extras), so the index rows come straight out of one
-    corpus pass — no aggregate, no re-join, no exchange before the write
+    corpus pass (rows without an id, which no search could name, drop) — no aggregate, no re-join, no exchange before the write
     clusters rows by cid so each list is one partition directory.
     """
     rows = _index_rows(corpus, centroids, id_col, emb_col, extra_cols)
@@ -225,8 +231,6 @@ def search_ivf_index(
     desyncs as soon as either table takes a single-table maintenance
     write.
     """
-    from merkonvectordb_spark.operators.ann import _centroids, _ivf_topk
-
     v_lists = (
         idx.lists.current_version() if version is None else version
     )

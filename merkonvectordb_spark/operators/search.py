@@ -19,6 +19,7 @@ Plan shape at scale (verified via .explain):
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Sequence
 
 import numpy as np
@@ -237,9 +238,15 @@ def kernel_topk(
     """Per-query top-k of ``corpus`` against a driver-held query set
     (``collect_queries``): one ``_topk_kernel`` pass, then
     ``row_number() <= k`` over ``Window.partitionBy(qid).orderBy(order)``
-    and 6dp output rounding.  ``route`` (see ``_topk_kernel``) restricts
-    which queries each row meets; its key column leaves the output.
-    Out go ``corpus``'s other columns, ``query_id_col`` and ``score``."""
+    and 6dp output rounding.  ``route=(key_col, pairs)`` restricts which
+    queries each row meets: a row keyed ``key`` meets query position
+    ``p`` for each ``(key, p)`` in ``pairs``.  Rows keyed otherwise are
+    filtered by a literal ``isin`` first (partition pruning on a
+    persisted table); the key column leaves the output.  Out go
+    ``corpus``'s other columns, ``query_id_col`` and ``score``."""
+    if route:
+        route = _csr(*route)
+        corpus = corpus.where(F.col(route[0]).isin(route[1]))
     drop = {emb_col, route[0]} if route else {emb_col}
     out_schema = T.StructType(
         [f for f in corpus.schema.fields if f.name not in drop]
@@ -263,6 +270,16 @@ def kernel_topk(
     )
 
 
+def _csr(key_col, pairs):
+    """``route`` in the kernel's sparse form, ``(key_col, keys, off,
+    pos)``: a row keyed ``keys[i]`` meets the query positions
+    ``pos[off[i]:off[i + 1]]``."""
+    pairs = sorted(set(pairs))
+    count = Counter(k for k, _ in pairs)
+    off = np.cumsum([0] + [count[k] for k in count], dtype=np.int64)
+    return key_col, list(count), off, np.array([p for _, p in pairs], np.int64)
+
+
 def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only,
                  route=None):
     """The Arrow kernel of ``kernel_topk``: ``groups`` lists (query
@@ -274,15 +291,78 @@ def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only,
     k-th largest raw score.  Out go the batch's other columns, ``__qid``
     and ``__raw``.
 
-    ``route=(key_col, keys, member)`` scores a row only against the
-    queries its key admits: ``member[i, p]`` says whether a row keyed
-    ``keys[i]`` meets query position ``p`` (IVF: a list id and the
-    queries probing that list; LSH re-rank: a candidate's query id and
-    that id's vectors).  Rows with other keys drop.  The admitted pairs
-    are gathered from the driver matrix and folded row-wise, in chunks
-    of at most 2^22 elements."""
-    key_col, keys, member = route if route else (None, (), None)
+    ``route=(key_col, keys, off, pos)`` scores a row only against the
+    queries its key admits: a row keyed ``keys[i]`` meets the query
+    positions ``pos[off[i]:off[i + 1]]`` (IVF: a list id and the queries
+    probing that list; LSH re-rank: a candidate's query id and that
+    id's vectors).  Rows with other keys drop.  The admitted (row,
+    query) pairs are listed with ``np.repeat``, folded against vectors
+    gathered from the driver matrices in chunks of at most 2^22
+    elements, and cut per query by a sort — all linear in the admitted
+    pairs, not in rows × queries."""
+    key_col, keys, off, qpos_of = route if route else (None, (), None, None)
     drop = [emb_col, key_col] if route else [emb_col]
+    if route:  # routed pairs gather their queries: one matrix per width
+        by_dim: dict = {}
+        for pos, qmat in groups:
+            by_dim.setdefault(qmat.shape[1], []).append((pos, qmat))
+        groups = [
+            (np.concatenate([p for p, _ in g]), np.vstack([m for _, m in g]))
+            for g in by_dim.values()
+        ]
+        # a query position's group and its row in that group's matrix
+        grp = np.full(len(qids), -1)
+        slot = np.zeros(len(qids), dtype=np.int64)
+        for g, (pos, _) in enumerate(groups):
+            grp[pos], slot[pos] = g, np.arange(len(pos))
+
+    def vectors(emb, rows, d):
+        return (
+            emb.take(rows).flatten().to_numpy(zero_copy_only=False)
+            .astype(np.float64).reshape(-1, 1, d)
+        )
+
+    def dense(emb, width, fold):
+        for pos, qmat in groups:
+            sel = np.flatnonzero(width == qmat.shape[1])
+            if sel.size == 0:
+                continue
+            score = fold(vectors(emb, sel, qmat.shape[1]), qmat[None])
+            ok = score >= min_score
+            if sel.size > k:
+                # k-th largest passing score per query (-inf when fewer
+                # than k pass); ties with it stay
+                kth = np.partition(
+                    np.where(ok, score, -np.inf), sel.size - k, axis=0
+                )[sel.size - k]
+                ok &= score >= kth
+            r, c = np.nonzero(ok)
+            yield sel[r], pos[c], score[r, c]
+
+    def routed(emb, width, kidx, fold):
+        sel = np.flatnonzero(kidx >= 0)
+        start, n = off[kidx[sel]], np.diff(off)[kidx[sel]]
+        row = np.repeat(sel, n)
+        qp = qpos_of[np.repeat(start - np.cumsum(n) + n, n) + np.arange(n.sum())]
+        raw = np.full(row.size, np.nan)
+        for g, (pos, qmat) in enumerate(groups):
+            d = qmat.shape[1]
+            m = np.flatnonzero((grp[qp] == g) & (width[row] == d))
+            step = max(1, (1 << 22) // max(d, 1))
+            for lo in range(0, m.size, step):
+                mm = m[lo : lo + step]
+                raw[mm] = fold(vectors(emb, row[mm], d)[:, 0], qmat[slot[qp[mm]]])
+        ok = raw >= min_score
+        row, qp, raw = row[ok], qp[ok], raw[ok]
+        if row.size == 0:
+            return
+        o = np.lexsort((-raw, qp))  # per query, raw descending
+        row, qp, raw = row[o], qp[o], raw[o]
+        first = np.flatnonzero(np.r_[True, qp[1:] != qp[:-1]])
+        n = np.diff(np.r_[first, qp.size])
+        kth = np.where(n > k, raw[first + np.minimum(n, k) - 1], -np.inf)
+        keep = raw >= np.repeat(kth, n)
+        yield row[keep], qp[keep], raw[keep]
 
     def kernel(batches):
         import pyarrow as pa
@@ -302,45 +382,15 @@ def _topk_kernel(emb_col, groups, qids, qid_arrow, k, min_score, dot_only,
                     pc.index_in(kcol, value_set=key_arr.cast(kcol.type))
                     .fill_null(-1).to_numpy()
                 )
-                width = np.where(kidx >= 0, width, -1)
-            rows, qpos, raw = [], [], []
-            for pos, qmat in groups:
-                d = qmat.shape[1]
-                sel = np.flatnonzero(width == d)
-                if sel.size == 0:
-                    continue
-                a = (
-                    emb.take(sel).flatten().to_numpy(zero_copy_only=False)
-                    .astype(np.float64).reshape(-1, 1, d)
-                )
-                if route:
-                    r, c = np.nonzero(member[:, pos][kidx[sel]])
-                    score = np.full((sel.size, len(pos)), np.nan)
-                    step = max(1, (1 << 22) // max(d, 1))
-                    for lo in range(0, r.size, step):
-                        rr, cc = r[lo : lo + step], c[lo : lo + step]
-                        score[rr, cc] = fold(a[rr, 0], qmat[cc])
-                else:
-                    score = fold(a, qmat[None])
-                ok = score >= min_score
-                if sel.size > k:
-                    # k-th largest passing score per query (-inf when
-                    # fewer than k pass); ties with it stay
-                    kth = np.partition(
-                        np.where(ok, score, -np.inf), sel.size - k, axis=0
-                    )[sel.size - k]
-                    ok &= score >= kth
-                r, c = np.nonzero(ok)
-                rows.append(sel[r])
-                qpos.append(pos[c])
-                raw.append(score[r, c])
-            if sum(map(len, rows)) == 0:
+                parts = list(routed(emb, width, kidx, fold))
+            else:
+                parts = list(dense(emb, width, fold))
+            if sum(len(r) for r, _, _ in parts) == 0:
                 continue
-            rows = np.concatenate(rows)
+            rows, qpos, raw = (np.concatenate(x) for x in zip(*parts))
             out = rb.drop_columns(drop).take(rows)
             yield pa.RecordBatch.from_arrays(
-                out.columns
-                + [qid_arr.take(np.concatenate(qpos)), pa.array(np.concatenate(raw))],
+                out.columns + [qid_arr.take(qpos), pa.array(raw)],
                 names=out.schema.names + ["__qid", "__raw"],
             )
 

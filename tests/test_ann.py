@@ -767,6 +767,7 @@ def test_ivfpq_recall_and_subset_of_probed_lists(clustered):
         IVF_N_PROBE,
         ivf_assign,
         knn_batch_ivfpq,
+        pq_codebook,
     )
 
     cents = clustered.where(F.col("vec_id") < 16).select(
@@ -776,9 +777,16 @@ def test_ivfpq_recall_and_subset_of_probed_lists(clustered):
     qset = clustered.where(F.col("vec_id") % 6 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    # a copy of query 0's vector without an id: it would top query 0,
+    # but no answer can name it
+    no_id = clustered.where(F.col("vec_id") == 0).select(
+        F.lit(None).cast("long").alias("vec_id"), "embedding"
+    )
     got = knn_batch_ivfpq(
-        clustered, qset, k=3, centroids=cents, min_score=0.0
+        clustered.union(no_id), qset, k=3, centroids=cents, min_score=0.0,
+        cb=pq_codebook(clustered, "vec_id", "embedding"),
     ).collect()
+    assert all(r.vec_id is not None for r in got)
     # membership: every hit must come from one of the query's probed lists
     assign = {
         r.vec_id: r.cid

@@ -98,13 +98,15 @@ def hostile(spark):
     """Corpus, queries and centroids with every row the kernels must
     handle as the expressions do: zero-norm, NaN-element, NULL-element,
     NULL, empty and wrong-dimension vectors on both sides; rows tied
-    exactly between two centroids; a raw score exactly at 0.0; eight
-    rows tied with [1, 0] spread over three partitions; a 3-d centroid
-    beside the 2-d ones, a zero-norm and a NULL centroid, cids out of
-    order."""
+    exactly between two centroids; eight rows tied with [1, 0] spread
+    over three partitions, which score exactly 1.0 against query 100
+    and exactly 0.0, past its top two, against query 109; a corpus row
+    without an id that would top query 100; a 3-d centroid beside the
+    2-d ones, a zero-norm and a NULL centroid, cids out of order."""
     corpus = spark.createDataFrame(
         spark.sparkContext.parallelize(
-            [(i, e, f"l{i % 4}") for i, e in enumerate(_EMBS)], 3
+            [(i, e, f"l{i % 4}") for i, e in enumerate(_EMBS)]
+            + [(None, [1.0, 0.0], "lnull")], 3
         ),
         "vec_id LONG, embedding ARRAY<FLOAT>, label STRING",
     )
@@ -113,6 +115,7 @@ def hostile(spark):
             (100, [1.0, 0.0]), (101, [0.6, 0.8]), (102, [0.0, 0.0]),
             (103, [1.0, 1.0, 0.0]), (104, None), (105, [NAN, 1.0]),
             (106, [0.2, -0.9]), (107, [0.0, 1.0]), (108, [1.0, 1.0]),
+            (109, [0.0, -1.0]),
         ],
         "query_id LONG, embedding ARRAY<FLOAT>",
     )
@@ -142,9 +145,10 @@ def two_row_batches(spark):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_ivf_assign_matches_max_of_struct_reference(hostile, two_row_batches):
+def test_ivf_assign_matches_max_of_struct_reference(spark, hostile):
     """Best list per row, ties to the lowest cid, all-NaN rows dropped,
-    carried columns kept; n_best > 1 ranks as the window did."""
+    carried columns kept; n_best > 1 ranks as the window did, pooling
+    the vectors of a repeated id."""
     corpus, queries, cents = hostile
     got = A.ivf_assign(corpus, cents, "vec_id", carry=("embedding", "label"))
     want = _ref_assign(corpus, cents, "vec_id", "embedding", 1,
@@ -154,6 +158,9 @@ def test_ivf_assign_matches_max_of_struct_reference(hostile, two_row_batches):
     assert rows == _rows(want)
     best = {r[0]: r[1] for r in rows}
     assert (best[12], best[13]) == (2, 3)  # exact ties: 2 beats 7, 3 beats 5
+    queries = queries.union(
+        spark.createDataFrame([(100, [0.0, 1.0])], queries.schema)
+    )
     got = A.ivf_assign(queries, cents, "query_id", n_best=3)
     want = _ref_assign(queries, cents, "query_id", "embedding", 3)
     assert _rows(got) == _rows(want)
@@ -163,26 +170,21 @@ def test_knn_batch_ivf_and_index_search_match_reference(
     hostile, hostile_index, two_row_batches
 ):
     """The in-memory and the persisted IVF search return the expression
-    plan's rows, scores and column order, including a raw score exactly
-    at min_score and more ties than k across two-row Arrow batches; k=0
+    plan's rows, scores and column order, with more ties than k across
+    two-row Arrow batches, both above and exactly at min_score; k=0
     returns nothing."""
     corpus, queries, cents = hostile
-    for k, min_score, n_probe in ((3, -1.0, 2), (30, 0.0, 6)):
-        want = _rows(
-            _ref_knn_batch_ivf(corpus, queries, k, cents, n_probe, min_score)
-        )
-        mem = A.knn_batch_ivf(corpus, queries, k, cents, n_probe, min_score,
-                              extra_cols=("label",))
-        disk = search_ivf_index(hostile_index, queries, k, n_probe, min_score)
-        assert mem.columns == disk.columns == [
-            "query_id", "vec_id", "label", "score"
-        ]
-        assert _rows(mem) == _rows(disk) == want, (k, min_score, n_probe)
-    assert (100, 2, "l2", 0.0) in want  # kept at raw == min_score
+    want = _rows(_ref_knn_batch_ivf(corpus, queries, 3, cents, 6, 0.0))
+    mem = A.knn_batch_ivf(corpus, queries, 3, cents, 6, 0.0,
+                          extra_cols=("label",))
+    disk = search_ivf_index(hostile_index, queries, 3, 6, 0.0)
+    assert mem.columns == disk.columns == ["query_id", "vec_id", "label", "score"]
+    assert _rows(mem) == _rows(disk) == want
+    assert (109, 0, "l0", 0.0) in want  # kept at raw == min_score
     assert A.knn_batch_ivf(corpus, queries, 0, cents).collect() == []
 
 
-def test_lsh_rerank_matches_reference(spark, hostile, two_row_batches):
+def test_lsh_rerank_matches_reference(spark, hostile):
     """``rerank_topk`` scores each candidate against its own query,
     and against every vector of a duplicated query id, as the join did."""
     corpus, queries, _ = hostile
@@ -196,13 +198,12 @@ def test_lsh_rerank_matches_reference(spark, hostile, two_row_batches):
         ),
         "vec_id LONG, embedding ARRAY<FLOAT>, label STRING, __qid LONG",
     )
-    for k in (2, 40):
-        got = A.rerank_topk(cand, queries, k, 0.0, "vec_id", "embedding",
-                            "query_id")
-        want = _ref_rerank(cand, queries, k, 0.0, "vec_id", "embedding",
-                           "query_id")
-        assert got.columns == want.columns
-        assert _rows(got) == _rows(want), k
+    got = A.rerank_topk(cand, queries, 2, 0.0, "vec_id", "embedding",
+                        "query_id")
+    want = _ref_rerank(cand, queries, 2, 0.0, "vec_id", "embedding",
+                       "query_id")
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want)
 
 
 def test_duplicate_query_ids_keep_their_results(spark, hostile, hostile_index):
