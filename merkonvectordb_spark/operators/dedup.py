@@ -564,15 +564,17 @@ def connected_components(
 
     Adaptive execution: the dup-pair graph is orders of magnitude smaller
     than the corpus (only docs with a verified near-duplicate), so below
-    ``driver_threshold`` edges a driver-side union-find answers in one
-    collect — the same bounded-size-side reasoning as a broadcast join.
-    Above it, distributed min-label propagation (iterative joins with
+    ``driver_threshold`` edges a driver-side union-find answers from one
+    collect of at most ``driver_threshold + 1`` edges — the same
+    bounded-size-side reasoning as a broadcast join.  Above it,
+    distributed min-label propagation (iterative joins with
     localCheckpoint lineage cuts; rounds = graph diameter — near-dup
     components are near-cliques, so 1-3 rounds in practice).
     """
     edges = edges.persist()
     id_type = edges.schema["a"].dataType.simpleString()
-    if edges.count() <= driver_threshold:
+    small = edges.limit(driver_threshold + 1).collect()
+    if len(small) <= driver_threshold:
         parent: dict = {}
 
         def find(x):
@@ -581,7 +583,7 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for row in edges.collect():
+        for row in small:
             a, b = row[0], row[1]
             parent.setdefault(a, a)
             parent.setdefault(b, b)

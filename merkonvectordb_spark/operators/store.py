@@ -68,6 +68,7 @@ def upsert(
     updates: DataFrame,
     order_col: str | None = None,
     bulk_inserts: bool = False,
+    seq_base: int | None = None,
 ) -> DataFrame:
     """W1/W2/W4 batched InsertOrUpdate (MerkonDatabase.cs:89-104).
 
@@ -84,6 +85,11 @@ def upsert(
     batch came through a shuffle/join — without it we fall back to
     ``monotonically_increasing_id``, which reflects partition layout and is
     only a faithful batch order for locally-constructed / ordered inputs.
+
+    Fresh inserts are numbered after ``seq_base``, a driver literal: the
+    state's max ``ingest_seq`` (one job reads it when ``None``), or a
+    larger one a caller already holds, e.g. the store-wide max when
+    ``state`` is a few collections of it.
 
     Scale guard: fresh-insert sequence numbers need a total order over
     the inserted keys.  The default path ranks them with a global
@@ -153,10 +159,8 @@ def upsert(
     )
     kept = merged.where(F.col("__src") == 0).select(*STATE_COLS)
     fresh = merged.where(F.col("__src") == 1).drop("ingest_seq")
-    # fresh seqs start after the state's max: a read of ingest_seq alone
-    max_seq = state.agg(
-        F.coalesce(F.max("ingest_seq"), F.lit(0)).alias("__max_seq")
-    )
+    if seq_base is None:
+        seq_base = state.agg(F.max("ingest_seq")).first()[0] or 0
     if bulk_inserts:
         from merkonvectordb_spark.operators.pipeline import (
             global_exclusive_prefix_sum,
@@ -172,14 +176,9 @@ def upsert(
     else:
         ins_w = Window.orderBy(F.asc("collection"), F.asc("key"))
         fresh = fresh.withColumn("__ord", F.row_number().over(ins_w))
-    # a one-row side: a cartesian product reads it in place, where a
-    # broadcast would cost a job of its own
-    inserted = (
-        fresh.hint("shuffle_replicate_nl")
-        .crossJoin(max_seq)
-        .withColumn("ingest_seq", F.col("__max_seq") + F.col("__ord"))
-        .select(*STATE_COLS)
-    )
+    inserted = fresh.withColumn(
+        "ingest_seq", F.lit(seq_base).cast("long") + F.col("__ord")
+    ).select(*STATE_COLS)
     return kept.unionByName(inserted)
 
 

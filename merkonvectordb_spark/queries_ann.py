@@ -1321,20 +1321,18 @@ def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space eval-set decontamination — the semantic twin of
     ``decontaminate``'s n-gram screen (the contamination-analysis pass of
     Brown et al. 2020 app. C / Touvron et al. 2023 §5, in vector space):
-    eval vectors (vec_id < 25, a stand-in benchmark set) broadcast to
-    every executor; each training vector keeps its single best eval
-    cosine via a partial-aggregable max-of-struct (ties → lowest eval
-    id, mirroring the oracle's row_number ordering) and is flagged when
-    it clears the threshold.
+    eval vectors (vec_id < 25, a stand-in benchmark set) are collected
+    to the driver as the centroids of ``ann._assign``; each training
+    vector keeps its single best eval cosine (ties → lowest eval id, the
+    oracle's row_number ordering) and is flagged when it clears the
+    threshold.
 
-    Scale shape: eval benchmarks are KB-MB (always broadcastable); the
-    corpus streams once with map-side combine — no corpus shuffle, no
-    window.  At 100 TB this is the cheapest possible screen: one scan,
-    one broadcast, one partial agg."""
-    from merkonvectordb_spark.functions.vector import (
-        cosine_similarity,
-        l2_norm,
-    )
+    Scale shape: eval benchmarks are KB-MB (always driver-sized); the
+    corpus streams once through one row-wise Arrow kernel — no join, no
+    aggregate, no shuffle.  At 100 TB this is the cheapest possible
+    screen: one scan, one pass."""
+    from merkonvectordb_spark.functions.vector import l2_norm
+    from merkonvectordb_spark.operators.ann import _assign, _centroids
 
     emb = (
         load_table(spark, sf_dir, "embeddings")
@@ -1348,29 +1346,14 @@ def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = emb.where(F.col("vec_id") < 25).select(
         F.col("vec_id").alias("cid"), F.col("emb").alias("cv")
     )
-    from merkonvectordb_spark.operators.skew import spread_small_scan
-
-    # the train×eval cosine scoring is CPU-bound folds; the small-file
-    # scan arrives 1-2 splits and ran it serially (measured round 10:
-    # 1.34 s on 1 task = 73 % of the query wall); no-op on wide scans
-    tr = spread_small_scan(emb.where(F.col("vec_id") >= 25))
-    scored = tr.crossJoin(F.broadcast(ev)).withColumn(
-        "raw", cosine_similarity(F.col("emb"), F.col("cv"))
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.max(
-            F.struct(
-                F.col("raw").alias("r"),
-                (-F.col("cid")).alias("nc"),
-                F.col("cid").alias("cid"),
-            )
-        ).alias("b")
+    best = _assign(
+        emb.where(F.col("vec_id") >= 25), _centroids(ev), "vec_id", "emb"
     )
     return best.select(
         "vec_id",
-        F.col("b.cid").alias("eval_id"),
-        F.round(F.col("b.r"), 6).alias("best_score"),
-        (F.col("b.r") >= F.lit(_SEM_DECON_THRESHOLD)).alias("contaminated"),
+        F.col("cid").alias("eval_id"),
+        F.round(F.col("__cos"), 6).alias("best_score"),
+        (F.col("__cos") >= F.lit(_SEM_DECON_THRESHOLD)).alias("contaminated"),
     )
 
 

@@ -17,6 +17,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -30,6 +31,17 @@ def get_spark(
     plan-shaping (AQE, broadcast threshold, Arrow) rather than
     local-mode-specific, so operator code written against this session
     behaves identically on a real cluster.
+
+    One setting is a worker cost, not a plan shape: Python workers fork
+    from ``merkonvectordb_spark.worker_daemon``, which stops pyspark's
+    per-task ``importlib.invalidate_caches()`` from re-reading the Spark
+    install's zip archives.  That cuts the fixed cost of every Python
+    task (a warm 1-task RDD stage: ~275 → ~100 ms at
+    ``local[4]``).  The package's parent directory is put on the
+    workers' ``PYTHONPATH`` so the daemon imports from any driver
+    working directory (the session is local, so workers see the
+    driver's files).  Both are static SparkContext settings: a session
+    that already exists keeps the stock daemon.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     n_shuffle = shuffle_partitions or int(
@@ -66,6 +78,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_RESULT", "1g"),
         )
         .config("spark.ui.enabled", "false")
+        # Python worker daemon without the per-task zip re-read (see the
+        # docstring)
+        .config("spark.python.daemon.module", "merkonvectordb_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

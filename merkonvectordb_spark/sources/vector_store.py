@@ -32,12 +32,32 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from merkonvectordb_spark.operators import store as ops
 from merkonvectordb_spark.schema import VECTORS_SCHEMA_DDL
 from merkonvectordb_spark.session import release_checkpoint
 
 _REGISTRY_DDL = "collection STRING, created_seq LONG"
+
+
+def _conform(batch: DataFrame) -> DataFrame:
+    """``batch`` with each column the table stores cast to its
+    ``VECTORS_SCHEMA_DDL`` type; other columns pass through."""
+    want = {f.name: f.dataType for f in T.StructType.fromDDL(VECTORS_SCHEMA_DDL)}
+    emb = batch.schema["embedding"].dataType if "embedding" in batch.columns else None
+    if not (
+        isinstance(emb, T.ArrayType) and isinstance(emb.elementType, T.NumericType)
+    ):
+        raise ValueError(
+            f"upsert batch needs a numeric array embedding, got {emb}"
+        )
+    return batch.select(
+        *[
+            F.col(c).cast(want[c]) if c in want else F.col(c)
+            for c in batch.columns
+        ]
+    )
 
 
 class VectorStore:
@@ -214,15 +234,20 @@ class VectorStore:
 
         Per call: the prepared batch is read once into a local
         checkpoint, released when the call ends.  Then one job collects
-        its collections, one job takes both ``ingest_seq`` maxima, one
+        its collections, one job takes the store's max ``ingest_seq``, one
         checkpoint evaluates the merge (``operators.store.upsert``, one
         pass over the affected partitions), one write replaces them, and
         the registry is collected once and written only when a
         collection is new.
 
-        A NULL ``collection`` raises ``ValueError`` before anything is
-        written: no partition can hold it and the registry cannot name
-        it."""
+        The batch's columns are cast to ``VECTORS_SCHEMA_DDL``'s types
+        first (an ``array<double>`` embedding, what ``createDataFrame``
+        infers from Python floats, is stored as ``array<float>``), so a
+        write can never change the type a later read expects.  An
+        embedding that is not a numeric array, and a NULL
+        ``collection``, raise ``ValueError`` before anything is
+        written: no partition can hold the latter and the registry
+        cannot name it."""
         upd = ops.with_key_from_metadata(records) if key_from_metadata else records
         if self.pre_normalized:
             from merkonvectordb_spark.functions.vector import l2_normalize
@@ -233,7 +258,7 @@ class VectorStore:
                 "embedding",
                 l2_normalize(F.col("embedding")).cast("array<float>"),
             )
-        upd = upd.localCheckpoint(eager=True)
+        upd = _conform(upd).localCheckpoint(eager=True)
         try:
             colls = [
                 r["collection"]
@@ -243,22 +268,12 @@ class VectorStore:
                 raise ValueError("upsert batch has rows with a NULL collection")
             colls.sort()
             state = self.vectors()
-            in_batch = F.col("collection").isin(colls)
-            g_max, a_max = state.agg(
-                F.coalesce(F.max("ingest_seq"), F.lit(0)),
-                F.coalesce(F.max(F.when(in_batch, F.col("ingest_seq"))), F.lit(0)),
-            ).first()
-            new_affected = ops.upsert(state.where(in_batch), upd)
-            # ops.upsert numbers inserts after the AFFECTED max; shift them
-            # past the GLOBAL max so sequences stay unique across collections
-            if g_max > a_max:
-                new_affected = new_affected.withColumn(
-                    "ingest_seq",
-                    F.when(
-                        F.col("ingest_seq") > a_max,
-                        F.col("ingest_seq") + F.lit(g_max - a_max),
-                    ).otherwise(F.col("ingest_seq")),
-                )
+            # inserts are numbered past the GLOBAL max, so sequences stay
+            # unique across collections
+            g_max = state.agg(F.max("ingest_seq")).first()[0] or 0
+            new_affected = ops.upsert(
+                state.where(F.col("collection").isin(colls)), upd, seq_base=g_max
+            )
             self._overwrite_partitions(new_affected)
         finally:
             release_checkpoint(upd)

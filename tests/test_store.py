@@ -427,6 +427,37 @@ def test_upsert_registers_new_collections_in_one_write(spark, tmp_path, monkeypa
     assert len(writes) == 2
 
 
+def test_upsert_conforms_the_batch_to_the_table_types(spark, tmp_path):
+    """A double-typed embedding batch (what createDataFrame infers from
+    Python floats) after a float one must leave every row readable: the
+    batch is cast to VECTORS_SCHEMA_DDL before it is written.  A
+    non-array embedding is refused before anything is written."""
+    store = VectorStore(spark, str(tmp_path))
+    store.upsert(
+        _upd(spark, [("c0", f"k{i}", "{}", [float(i), 1.0], TS) for i in range(3)]),
+        key_from_metadata=False,
+    )
+    doubles = spark.createDataFrame(
+        [("c0", f"k{i}", "{}", [float(i), 1.0], TS) for i in range(3, 6)],
+        "collection STRING, key STRING, metadata STRING, "
+        "embedding ARRAY<DOUBLE>, ts TIMESTAMP",
+    )
+    store.upsert(doubles, key_from_metadata=False)
+    hits = store.search("c0", [1.0, 1.0], k=6).collect()
+    assert sorted(r.key for r in hits) == [f"k{i}" for i in range(6)]
+    assert store.scan("c0").schema["embedding"].dataType.simpleString() == (
+        "array<float>"
+    )
+    text = spark.createDataFrame(
+        [("c0", "k9", "{}", "[1.0, 1.0]", TS)],
+        "collection STRING, key STRING, metadata STRING, embedding STRING, "
+        "ts TIMESTAMP",
+    )
+    with pytest.raises(ValueError, match="numeric array embedding"):
+        store.upsert(text, key_from_metadata=False)
+    assert store.scan("c0").count() == 6
+
+
 def test_upsert_job_budget_and_releases_its_blocks(spark, tmp_path):
     """One upsert into an existing collection: the batch is read once and
     the store's metadata once, so the whole call fits in 14 Spark jobs,

@@ -87,8 +87,6 @@ ALLOW: dict[tuple[str, str], str] = {
         "n_docs scalar inside the BM25 half (1 row)",
     ("doc_keywords_tfidf", "nested_loop"):
         "n_docs scalar feeding the IDF (1 row)",
-    ("upsert_roundtrip", "nested_loop"):
-        "max(ingest_seq) scalar crossJoined to the insert batch (1 row)",
     ("get_batch_prefix", "nested_loop"):
         "first-missing-rank scalar for the prefix cut (1 row)",
     ("quality_quantile_filter", "nested_loop"):
@@ -102,9 +100,6 @@ ALLOW: dict[tuple[str, str], str] = {
     ("mmr_rerank", "nested_loop"):
         "fixed query batch (Q=5) broadcast for candidate scoring — "
         "|corpus|×Q, Q constant",
-    ("semantic_decontam", "nested_loop"):
-        "fixed eval-benchmark set (25 vectors) broadcast against the "
-        "training corpus — |corpus|×K with K constant",
     ("hist_quantiles", "nested_loop"):
         "global min/max/count scalar (1 row) crossJoined for binning "
         "and interpolation",
